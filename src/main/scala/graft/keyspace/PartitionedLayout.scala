@@ -2,6 +2,7 @@ package graft.keyspace
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.hash.Fnv1a32.shardId
 
@@ -17,11 +18,29 @@ import graft.hash.Fnv1a32.shardId
   * partition pruning, no data-dependent planning needed. At 100 TB with
   * more shards (the shard count is a layout parameter, not a semantic),
   * the same layout bounds every point op to one directory's row groups.
+  *
+  * The engine owns the layout's schema: the writers project to it and the
+  * readers declare it, so a GET or a listing plans without reading a
+  * parquet footer (schema inference is a Spark job of its own, paid on
+  * every call) and what is read can never drift from what was written.
   */
 object PartitionedLayout {
 
+  /** The hash layout's columns; `shard_id` is BIGINT, as `shardId` makes it. */
+  val Schema: StructType =
+    StructType.fromDDL("key STRING, value STRING, shard_id BIGINT")
+
+  /** The range layout's columns ([[writeRanged]], [[rangeScan]]); the
+    * range id takes the place of the hash shard id. */
+  val RangedSchema: StructType =
+    StructType.fromDDL("key STRING, value STRING, range_id INT")
+
+  private def project(df: DataFrame, schema: StructType): DataFrame =
+    df.select(schema.fields.toSeq.map(f => col(f.name).cast(f.dataType)): _*)
+
   def write(state: DataFrame, path: String): Unit =
-    state.write.mode("overwrite").partitionBy("shard_id").parquet(path)
+    project(state, Schema)
+      .write.mode("overwrite").partitionBy("shard_id").parquet(path)
 
   /** Point GET against the partitioned layout: shard filter (pruned at
     * planning) + key filter (pushed into the parquet reader). `numShards`
@@ -30,14 +49,13 @@ object PartitionedLayout {
     * main.go:219-232`). */
   def pointGet(spark: SparkSession, path: String, key: String,
       numShards: Int = 4): DataFrame =
-    spark.read.parquet(path)
+    spark.read.schema(Schema).parquet(path)
       .filter(col("shard_id") === shardId(lit(key), numShards) &&
         col("key") === key)
-      .select("key", "value", "shard_id")
 
   /** Per-shard listing: reads exactly one partition directory. */
   def listShard(spark: SparkSession, path: String, shard: Int): DataFrame =
-    spark.read.parquet(path)
+    spark.read.schema(Schema).parquet(path)
       .filter(col("shard_id") === shard)
       .select("key")
 
@@ -48,7 +66,7 @@ object PartitionedLayout {
     * global sort, O(page) work per call no matter the store size. */
   def listPage(spark: SparkSession, path: String, shard: Int,
       cursor: String, n: Int): DataFrame =
-    spark.read.parquet(path)
+    spark.read.schema(Schema).parquet(path)
       .filter(col("shard_id") === shard && col("key") > cursor)
       .select("key").orderBy("key").limit(n)
 
@@ -70,7 +88,7 @@ object PartitionedLayout {
     val rangeId = bounds.foldLeft(lit(0)) { (acc, b) =>
       acc + when(col("key") >= b, 1).otherwise(0)
     }
-    state.withColumn("range_id", rangeId)
+    project(state.withColumn("range_id", rangeId), RangedSchema)
       .repartition(col("range_id"))
       .sortWithinPartitions("key")
       .write.mode("overwrite").partitionBy("range_id").parquet(path)
@@ -235,7 +253,7 @@ object PartitionedLayout {
       end: String, bounds: Seq[String]): DataFrame = {
     val lo = bounds.count(b => byteCompare(b, start) <= 0)
     val hi = bounds.count(b => byteCompare(b, end) < 0)
-    spark.read.parquet(path)
+    spark.read.schema(RangedSchema).parquet(path)
       .filter(col("range_id") >= lo && col("range_id") <= hi &&
         col("key") >= start && col("key") < end)
       .select("key")

@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.keyspace.PartitionedLayout.{Schema => KvSchema}
+
 /** Source/sink breadth for the keyspace and fixture tables: the engine's
   * canonical storage is parquet (columnar, predicate/projection pushdown,
   * partition pruning), but ingestion pipelines arrive as CSV and JSON
@@ -23,8 +25,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     occur in the data.
   */
 object Sources {
-
-  val KvSchema = "key STRING, value STRING, shard_id BIGINT"
 
   def writeKv(state: DataFrame, base: String): Unit = {
     state.write.mode("overwrite").parquet(s"$base/parquet")

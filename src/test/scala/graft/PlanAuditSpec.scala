@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.keyspace.{KvLog, PartitionedLayout}
@@ -16,6 +17,29 @@ class PlanAuditSpec extends SparkSpec {
     RelationalQueries.queries
       .getOrElse(name, graft.relational.TpchMoreQueries.queries(name))(spark, sf)
       .queryExecution.executedPlan.toString
+
+  /** `body`'s result and the Spark jobs it submitted, counted by a
+    * listener's `onJobStart` on a job group of this call's own. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"plan-audit-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(
+            _.getProperty("spark.jobGroup.id") == group)) jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    try {
+      val r = body
+      org.apache.spark.graft.ListenerBusAccess.waitUntilEmpty(sc)
+      (r, jobs.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 
   test("bpe served: one corpus scan, no joins — the tokenizer is literals") {
     graft.text.BpeVocab.buildIfMissing(spark, sf)
@@ -188,7 +212,14 @@ class PlanAuditSpec extends SparkSpec {
       // coalesce(1): one file per shard directory, so file counts in the
       // scan metrics directly reflect partition pruning
       PartitionedLayout.write(KvLog.state(spark, sf).coalesce(1), dir)
-      val q = PartitionedLayout.pointGet(spark, dir, "order:42")
+      // the reader declares the layout schema, so planning the GET reads
+      // no footer: no job until the action, and the action is one job
+      val (q, planJobs) = jobsOf {
+        val q = PartitionedLayout.pointGet(spark, dir, "order:42")
+        q.queryExecution.executedPlan
+        q
+      }
+      assert(planJobs === 0, "building and planning a GET must submit no job")
       val p = q.queryExecution.executedPlan.toString
       // constant-folded fnv1a32('order:42') % 4 = 1 arrives as a literal
       // partition filter
@@ -196,7 +227,8 @@ class PlanAuditSpec extends SparkSpec {
       assert(p.contains("(shard_id#") && p.contains("= 1)"), p.take(3000))
       // and the key predicate is pushed to the reader
       assert(p.contains("EqualTo(key,order:42)"), p.take(3000))
-      val rows = q.collect()
+      val (rows, runJobs) = jobsOf(q.collect())
+      assert(runJobs === 1, s"a GET must run as one job, ran $runJobs")
       assert(rows.length === 1 && rows.head.getString(0) === "order:42")
       // partition pruning: only 1 of the 4 shard directories is read
       val scanned = q.queryExecution.executedPlan.collectLeaves()

@@ -34,7 +34,7 @@ class ShardCountSpec extends SparkSpec {
       val q = PartitionedLayout.pointGet(spark, dir, "order:42", n)
       val rows = q.collect()
       assert(rows.length === 1)
-      // partition columns come back INT (directory values are re-inferred)
+      // partition columns come back BIGINT (the layout schema declares them)
       assert(rows.head.getAs[Number]("shard_id").longValue ===
         Fnv1a32.hashString("order:42") % n)
       val scanned = q.queryExecution.executedPlan.collectLeaves()

@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.file.Files
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.col
 
 import graft.SparkSpec
 import graft.keyspace.{KvLog, PartitionedLayout}
@@ -42,6 +43,29 @@ class KvStorageSpec extends SparkSpec {
       // deleted key: the 404 path
       assert(PartitionedLayout.pointGet(spark, s"$base/layout", "order:101")
         .isEmpty)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
+    }
+  }
+
+  test("a replayed batch (exact duplicate rows) compacts to the single-copy state") {
+    val base = Files.createTempDirectory("graft_kv_replay").toString
+    try {
+      // the log as applyStream writes it: KvOp's columns, seq a BIGINT
+      val batch = KvLog.log(spark, sf)
+        .select(col("seq").cast("long"), col("op"), col("key"), col("value"))
+      // the at-least-once failure: the same batch lands in the log twice
+      batch.write.parquet(s"$base/once")
+      batch.write.parquet(s"$base/twice")
+      batch.write.mode("append").parquet(s"$base/twice")
+      assert(spark.read.parquet(s"$base/twice").count() ===
+        2 * spark.read.parquet(s"$base/once").count())
+
+      def state(dir: String) = KvStorage.currentState(spark, dir).collect()
+        .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
+      val once = state(s"$base/once")
+      assert(once.nonEmpty)
+      assert(state(s"$base/twice") === once)
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
     }
