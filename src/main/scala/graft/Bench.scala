@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.collection.mutable.ArrayBuffer
 
 /** Adaptive measurement logic, separated from the Spark plumbing so the
@@ -212,12 +211,6 @@ object BenchLogic {
   */
 object Bench {
 
-  /** Materialize every output column. `count()` lets Catalyst prune all
-    * projections, so projection-heavy queries would time scan+count instead
-    * of the actual work; the `noop` sink consumes every row in full. */
-  private def run(df: DataFrame): Unit =
-    df.write.format("noop").mode("overwrite").save()
-
   val Repeats = 2
   val SentinelEvery = 10
 
@@ -231,38 +224,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // A/B switch for the explosion-pin repartitions (Par.pin); default
-      // off — the measured-faster layout at every SF actually benched.
-      // Env-settable so scale rehearsals can measure both ways without a
-      // rebuild; the driver's invocation never sets it.
-      .config(Par.PinKey, sys.env.getOrElse("SPARK_GRAFT_PIN", "false"))
-      // ObjectHashAggregate (collect_list posting builds) falls back to
-      // sort-based aggregation after this many distinct groups per task
-      // (Spark default 128 — observed firing on every posting build).
-      // Env-parameterised for the A/B the round-11 verdict asked for;
-      // the default stays Spark's until a both-SF win is recorded.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OHA_FALLBACK", "128"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The reap between timed runs unpersists locally-checkpointed RDDs,
-    // and every unpersist logs a WARN ("locally checkpointed … cannot be
-    // recomputed after unpersisting") — hundreds of lines that flood the
-    // driver's last-2000-chars stdout capture and can push the one-line
-    // JSON out of it (the round-10/11 parsed:null failures). The released
-    // frames are never re-read (each timed run rebuilds its query from
-    // scratch — pinned by LocalCheckpointReleaseSpec), so the warning
-    // carries no information here; silence the rdd loggers for this
-    // process only.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
+    val spark = Session()
 
     // Committed clean-run records (bench_record.json = a clean run's
     // bench_detail.json, updated only when a quiet-host run is committed).
@@ -277,21 +239,7 @@ object Bench {
         else (Map.empty[String, Double], None)
       } catch { case _: Throwable => (Map.empty[String, Double], None) }
 
-    // untimed warmup: initialize parquet reader, codegen, and shuffle
-    // machinery, and read EVERY fixture table end-to-end (all columns via
-    // the noop sink) so no timed query absorbs the first cold read of a
-    // table's pages. events.parquet goes through EventsQueries.events —
-    // the unit-normalizing reader every query uses.
-    val tables = Seq("region", "nation", "customer", "supplier", "part",
-      "orders", "lineitem", "documents", "embeddings")
-    for (t <- tables)
-      try run(spark.read.parquet(s"$sfDir/$t.parquet"))
-      catch { case _: Throwable => () }
-    try {
-      run(graft.events.EventsQueries.events(spark, sfDir))
-      run(spark.read.parquet(s"$sfDir/region.parquet").groupBy("r_name").count())
-      run(SparkEntry.entry(spark))
-    } catch { case _: Throwable => () }
+    Session.warm(spark, sfDir)
 
     def sentinelOnce(): Double = {
       // explicit GC every sentinel block (i.e. every SentinelEvery queries,
@@ -302,7 +250,7 @@ object Bench {
       // the suite total and buys each block a clean-slate heap.
       System.gc()
       val t0 = System.nanoTime()
-      try run(spark.read.parquet(s"$sfDir/region.parquet")
+      try Session.consume(spark.read.parquet(s"$sfDir/region.parquet")
         .groupBy("r_name").count())
       catch { case _: Throwable => () }
       (System.nanoTime() - t0) / 1e9
@@ -324,7 +272,7 @@ object Bench {
         name -> { () =>
           val t0 = System.nanoTime()
           val failed =
-            try { run(fn(spark, sfDir)); false }
+            try { Session.consume(fn(spark, sfDir)); false }
             catch {
               case e: Throwable =>
                 if (!errors.exists(_._1 == name))
@@ -332,14 +280,9 @@ object Bench {
                 true
             }
           val t = (System.nanoTime() - t0) / 1e9
-          // queries that localCheckpoint intermediates (dedup family) leave
-          // blocks behind; dropping them between runs keeps each timing
-          // independent instead of degrading late queries under accumulated
-          // storage-memory pressure. blocking=true so the removal itself
-          // finishes outside the next query's timed region. The
-          // Materialize reap clears persist-mode CacheManager entries too.
-          Materialize.reapAll(spark)
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+          // outside the timed region: each timing stays independent of
+          // the blocks earlier queries left behind
+          Session.reap(spark)
           if (failed) -1.0 else t
         }
       }.toMap

@@ -50,9 +50,9 @@ import org.apache.spark.storage.StorageLevel
   *   1. loops [[release]] each superseded round's frame as soon as the
   *      next round is materialized (bounds WITHIN-query growth to the
   *      live frontier), and
-  *   2. the per-query drivers (Verify / Bench) call [[reapAll]] once a
-  *      query's result has been written/counted (bounds ACROSS-query
-  *      growth to zero).
+  *   2. the mains call [[Session.reap]] (which runs [[reapAll]])
+  *      once a query's result has been written/consumed (bounds
+  *      ACROSS-query growth to zero).
   * A long-lived session that embeds the library directly owns step 2:
   * without a reap it retains O(frames-per-query) MEMORY_AND_DISK
   * entries per invocation (each loop's final frame plus never-released

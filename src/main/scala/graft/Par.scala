@@ -2,64 +2,21 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
 
-/** Parallelism repair for the two stage shapes AQE mis-sizes (guide §2.5):
+/** Parallelism repair for unsplittable input, the stage shape AQE
+  * mis-sizes (guide §2.5): a parquet file with one row group scans as
+  * ONE task, so a compute-heavy derivation fused into the scan stage
+  * (shingling, tokenizing, codec decode) runs serially while the rest of
+  * the machine idles. The guide's prescription is "repartition
+  * immediately after the read". [[spread]] does that, gated on the
+  * actual scan partition count so it is a no-op on any corpus big enough
+  * to split naturally — at 100 TB the gate never fires and no shuffle is
+  * added. The target count comes from the session's
+  * `defaultParallelism`, never a constant, so local[N] and a 1000-core
+  * cluster each get their own right answer.
   *
-  *   1. **Unsplittable input** — a parquet file with one row group scans
-  *      as ONE task, so a compute-heavy derivation fused into the scan
-  *      stage (shingling, tokenizing, codec decode) runs serially while
-  *      the rest of the machine idles. The guide's prescription is
-  *      "repartition immediately after the read". [[spread]] does that,
-  *      gated on the actual scan partition count so it is a no-op on any
-  *      corpus big enough to split naturally — at 100 TB the gate never
-  *      fires and no shuffle is added.
-  *
-  *   2. **Explosion after aggregation** — AQE sizes a post-shuffle stage
-  *      by the bytes ENTERING the exchange, but a posting-list /
-  *      band-bucket stage emits O(k²) pairs per list AFTER it: bytes-in
-  *      under-states compute-out by the explosion factor, and the whole
-  *      pair generation lands on 1-2 tasks. [[pin]] makes the exchange
-  *      an explicit-count hash repartition, which AQE leaves alone, so
-  *      the exploding stage keeps the session's configured parallelism.
-  *      Used only ahead of `collect_list`-style gather aggregates, where
-  *      the skipped partial-aggregation phase reduced nothing anyway.
-  *
-  * Both derive the target count from session config (the cluster-tuned
-  * `spark.sql.shuffle.partitions` / `defaultParallelism`), never a
-  * constant, so local[N] and a 1000-core cluster each get their own
-  * right answer.
+  * [[together]] overlaps a query's independent eager legs.
   */
 object Par {
-
-  /** The session's configured shuffle parallelism. */
-  def parts(df: DataFrame): Int =
-    df.sparkSession.sessionState.conf.numShufflePartitions
-
-  /** Opt-in switch for [[pin]]. Default OFF: round 11 measured the pin
-    * sites as a net wall-clock REGRESSION at sf0.1 on a quiet host
-    * (dedup_simhash_pairs 0.56×, dedup_minhash_lsh 0.64×,
-    * dedup_simhash64_pairs 0.73×, plus their corpus_* consumers
-    * 0.68–0.83×): with AQE's coalesced 1–2 task layout the serial pair
-    * work costs less than 32-way task dispatch across the chain's many
-    * small stages. The explosion-blindness diagnosis (AQE sizes the
-    * post-shuffle stage by bytes entering the exchange, blind to the
-    * O(k²) pair fan-out after it) remains correct — but at real corpus
-    * scale the exchange input is large enough that AQE keeps the stage
-    * wide on its own, so the pin only matters in a mid-scale band. A
-    * cluster operator in that band can turn it on; the default keeps
-    * the measured-faster layout. */
-  val PinKey = "spark.graft.pinExplosions"
-
-  /** Pin the exchange feeding an explosion-bearing aggregate: an
-    * explicit-count hash repartition on the aggregate's keys that AQE
-    * will not coalesce, so pair generation after the aggregate runs at
-    * the configured parallelism instead of at 1-2 AQE-coalesced tasks.
-    * The aggregate itself recognizes the child partitioning and adds no
-    * second exchange. No-op unless [[PinKey]] is set true — see its
-    * scaladoc for the measured evidence. */
-  def pin(df: DataFrame, keys: Column*): DataFrame =
-    if (df.sparkSession.conf.get(PinKey, "false").toBoolean)
-      df.repartition(parts(df), keys: _*)
-    else df
 
   /** Run independent eager legs (localCheckpoint / index-serve
     * materializations) of ONE query as concurrent Spark jobs

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Optimization-round measurement tool (guide §1/§7.2): dump
@@ -14,14 +13,7 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.lift(2).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -34,8 +26,7 @@ object Plans {
         } catch { case e: Throwable =>
           System.err.println(s"[plans] $name failed: ${e.getMessage}")
         }
-        Materialize.reapAll(spark)
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+        Session.reap(spark)
       }
     spark.stop()
   }

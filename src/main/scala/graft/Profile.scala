@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Optimization-round measurement tool (guide §1/§7.1): run the named
@@ -19,16 +18,7 @@ object Profile {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
     val repeats = args.lift(2).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config(Par.PinKey, sys.env.getOrElse("SPARK_GRAFT_PIN", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
 
     val stages = mutable.ArrayBuffer[StageRow]()
     val stageToJob = mutable.Map[Int, Int]()
@@ -49,27 +39,16 @@ object Profile {
         }
     })
 
-    def run(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-
-    // warmup like Bench: read fixtures so no timed run pays the cold read
-    val tables = Seq("region", "nation", "customer", "supplier", "part",
-      "orders", "lineitem", "documents", "embeddings")
-    for (t <- tables)
-      try run(spark.read.parquet(s"$sfDir/$t.parquet"))
-      catch { case _: Throwable => () }
-    try run(graft.events.EventsQueries.events(spark, sfDir))
-    catch { case _: Throwable => () }
+    Session.warm(spark, sfDir)
 
     for (name <- names; fn <- SparkEntry.queries.get(name)) {
       val times = (1 to repeats).map { i =>
-        Materialize.reapAll(spark)
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+        Session.reap(spark)
         stages.clear(); stageToJob.clear()
         collecting = i == repeats // collect stage detail on the warm run
         spark.sparkContext.setJobDescription(name)
         val t0 = System.nanoTime()
-        run(fn(spark, sfDir))
+        Session.consume(fn(spark, sfDir))
         val t = (System.nanoTime() - t0) / 1e9
         // drain the async listener bus before turning collection off —
         // without this, tail stages whose completion events are still

@@ -15,13 +15,21 @@ import graft.relational.{AsOfQueries, BasketQueries, PageRank, PartSuppQueries, 
 import graft.sim.{BeamSearch, KnnGraphIndex, MatryoshkaQueries, SimilarityQueries}
 import graft.text.{BudgetQueries, CollocationQueries, DistributionQueries, MaskingQueries, PipelineQueries, SweepQueries, TextQueries}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** One registry module: a family of queries and the DuckDB oracle for
+  * each, declared side by side so the registry names the module once. */
+trait QueryModule {
+  def queries: Map[String, (SparkSession, String) => DataFrame]
+  def oracle: Map[String, String]
+}
+
+/** The query registry — see SURVEY.md §7.
   *
   * `queries` carries one named entry per implemented operator from
   * SURVEY.md §2 (plus the training-data-pipeline extensions); `oracleSql`
-  * carries the DuckDB-equivalent statement for every oracle-checkable query.
-  * Column names and row ordering are aligned pairwise — the driver's compare
-  * hashes values after sorting columns by name.
+  * carries the DuckDB-equivalent statement for every query. Both are
+  * views of the one [[modules]] list. Column names and row ordering are
+  * aligned pairwise — the oracle compare hashes values after sorting
+  * columns by name.
   */
 object SparkEntry {
 
@@ -30,56 +38,22 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     KeyspaceQueries.queries("kv_point_get")(spark, "/root/testdata/sf0.001")
 
-  private val queryModules: Seq[Map[String, (SparkSession, String) => DataFrame]] =
-    Seq(KeyspaceQueries.queries, BloomGate.queries, ClusterQueries.queries,
-      RingRouter.queries,
-      TextQueries.queries,
-      PipelineQueries.queries, BudgetQueries.queries, SweepQueries.queries,
-      DedupQueries.queries, DedupComponents.queries,
-      GraphXAnalytics.queries, HitsQueries.queries,
-      AsOfQueries.queries, SimilarityQueries.queries,
-      KnnGraphIndex.queries, BeamSearch.queries,
-      MatryoshkaQueries.queries, CollocationQueries.queries,
-      MaskingQueries.queries,
-      Multimodal.queries, EventsQueries.queries, EventsQueries.moreQueries,
-      SkewQueries.queries, CohortQueries.queries, CohortQueries.moreQueries,
-      TrendQueries.queries, LifecycleQueries.queries, BenfordQueries.queries,
-      CausalQueries.queries, SeasonalQueries.queries,
-      WorkingSetQueries.queries,
-      JourneyQueries.queries, JourneyQueries.moreQueries,
-      DistributionQueries.queries,
-      RelationalQueries.queries, TpchMoreQueries.queries,
-      PartSuppQueries.queries, BasketQueries.queries,
-      RangeJoinQueries.queries, PageRank.queries,
-      RetrievalQueries.queries, RagPipeline.queries,
-      ProfileQueries.queries, PrivacyQueries.queries, KvGenQueries.queries)
+  private[graft] val modules: Seq[QueryModule] =
+    Seq(KeyspaceQueries, BloomGate, ClusterQueries, RingRouter,
+      TextQueries, PipelineQueries, BudgetQueries, SweepQueries,
+      DedupQueries, DedupComponents, GraphXAnalytics, HitsQueries,
+      AsOfQueries, SimilarityQueries, KnnGraphIndex, BeamSearch,
+      MatryoshkaQueries, CollocationQueries, MaskingQueries, Multimodal,
+      EventsQueries, SkewQueries, CohortQueries, TrendQueries,
+      LifecycleQueries, BenfordQueries, CausalQueries, SeasonalQueries,
+      WorkingSetQueries, JourneyQueries, DistributionQueries,
+      RelationalQueries, TpchMoreQueries, PartSuppQueries, BasketQueries,
+      RangeJoinQueries, PageRank, RetrievalQueries, RagPipeline,
+      ProfileQueries, PrivacyQueries, KvGenQueries)
 
-  private val oracleModules: Seq[Map[String, String]] =
-    Seq(KeyspaceQueries.oracle, BloomGate.oracle, ClusterQueries.oracle,
-      RingRouter.oracle,
-      TextQueries.oracle,
-      PipelineQueries.oracle, BudgetQueries.oracle, SweepQueries.oracle,
-      DedupQueries.oracle, DedupComponents.oracle,
-      GraphXAnalytics.oracle, HitsQueries.oracle,
-      AsOfQueries.oracle, SimilarityQueries.oracle,
-      KnnGraphIndex.oracle, BeamSearch.oracle,
-      MatryoshkaQueries.oracle, CollocationQueries.oracle,
-      MaskingQueries.oracle,
-      Multimodal.oracle, EventsQueries.oracle, EventsQueries.moreOracle,
-      SkewQueries.oracle, CohortQueries.oracle, CohortQueries.moreOracle,
-      TrendQueries.oracle, LifecycleQueries.oracle, BenfordQueries.oracle,
-      CausalQueries.oracle, SeasonalQueries.oracle,
-      WorkingSetQueries.oracle,
-      JourneyQueries.oracle, DistributionQueries.oracle,
-      RelationalQueries.oracle, TpchMoreQueries.oracle,
-      PartSuppQueries.oracle, BasketQueries.oracle,
-      RangeJoinQueries.oracle, PageRank.oracle,
-      RetrievalQueries.oracle, RagPipeline.oracle,
-      ProfileQueries.oracle, PrivacyQueries.oracle, KvGenQueries.oracle)
-
-  private def merged[V](modules: Seq[Map[String, V]]): Map[String, V] = {
-    val total = modules.map(_.size).sum
-    val m = modules.reduce(_ ++ _)
+  private def merged[V](maps: Seq[Map[String, V]]): Map[String, V] = {
+    val total = maps.map(_.size).sum
+    val m = maps.reduce(_ ++ _)
     require(m.size == total,
       s"query name collision across modules: ${total - m.size} shadowed")
     m
@@ -87,9 +61,9 @@ object SparkEntry {
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    merged(queryModules)
+    merged(modules.map(_.queries))
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = merged(oracleModules)
+    * the same parquet tables. */
+  def oracleSql: Map[String, String] = merged(modules.map(_.oracle))
 }

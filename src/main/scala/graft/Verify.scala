@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -13,15 +12,7 @@ object Verify {
     // optional 3rd arg: comma-separated query-name filter for local
     // iteration (the driver always passes exactly two args → full run)
     val only = args.lift(2).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     new java.io.File(outDir).mkdirs()
     val failed = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -33,12 +24,7 @@ object Verify {
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
           Some(name)
         }
-      // drop localCheckpoint blocks so one query's cached intermediates
-      // don't squeeze the next query's execution memory; the Materialize
-      // reap additionally clears persist-mode CacheManager entries (the
-      // RDD sweep alone frees blocks but leaves the cached-plan entry)
-      Materialize.reapAll(spark)
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      Session.reap(spark)
       failure
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -17,7 +17,7 @@ import graft.oracle.Ora
   * dimension broadcasts; Spark's planner picks broadcast-hash automatically
   * for these (verified via explain in ClusterSpec).
   */
-object ClusterQueries {
+object ClusterQueries extends graft.QueryModule {
 
   /** The broadcast's total time budget (`cmd/coordinator/main.go:473`). */
   val BroadcastBudgetMs = 4000L

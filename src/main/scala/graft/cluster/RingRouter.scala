@@ -33,7 +33,7 @@ import graft.oracle.Ora
   *     The mod comparison keeps the reference's FNV semantics — that is
   *     the placement being measured against.
   */
-object RingRouter {
+object RingRouter extends graft.QueryModule {
 
   /** Virtual nodes per physical node. 64 bounds the per-node load spread
     * to ~±15% on the fixture (spec-asserted); variance shrinks ~1/√V. */

@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * is the same computation GraphX's connectedComponents runs, expressed on
   * Datasets so it stays inside Catalyst/Tungsten.
   */
-object DedupComponents {
+object DedupComponents extends graft.QueryModule {
 
   /** edges: (doc_a, doc_b) undirected. Returns (doc_id, component). */
   def components(edges: DataFrame): DataFrame = {

@@ -24,7 +24,7 @@ import graft.oracle.Ora
   * Everything is deterministic and mirrored bit-for-bit in the DuckDB
   * oracles (hash kernel = fnv1a32 on both sides).
   */
-object DedupQueries {
+object DedupQueries extends graft.QueryModule {
 
   val JaccardThreshold = 0.5
 
@@ -117,9 +117,9 @@ object DedupQueries {
     // any scale. Emitted rows are bit-identical (exact integer counts;
     // n_a is functionally dependent on doc_a, so adding it to the pair
     // group-by keys changes no groups).
-    val posting = graft.Par.pin(sh
+    val posting = sh
       .select(col("doc_id"), size(col("shingles")).as("n_sh"),
-        explode(col("shingles")).as("sh")), col("sh"))
+        explode(col("shingles")).as("sh"))
       .groupBy("sh")
       .agg(collect_list(struct(col("doc_id"), col("n_sh"))).as("ids"))
       .filter(size(col("ids")).between(2, cap))
@@ -166,7 +166,7 @@ object DedupQueries {
     * candidate set. */
   private[graft] def bandCandidates(sh: DataFrame,
       cap: Int = MaxPosting): DataFrame =
-    graft.Par.pin(bandSignatures(sh), col("band"), col("sig"))
+    bandSignatures(sh)
       .groupBy("band", "sig").agg(collect_list(col("doc_id")).as("ids"))
       .filter(size(col("ids")).between(2, cap))
       .select(explode(col("ids")).as("doc_a"), col("ids"))
@@ -622,7 +622,7 @@ object DedupQueries {
         explode(sequence(lit(0), lit(3))).as("c"))
         .withColumn("chunk",
           expr("shiftright(simhash, CAST(8 * c AS INT)) & 255"))
-      val cand = graft.Par.pin(chunks, col("c"), col("chunk"))
+      val cand = chunks
         .groupBy("c", "chunk")
         .agg(collect_list(struct(col("doc_id"), col("simhash")))
           .as("members"))
@@ -653,7 +653,7 @@ object DedupQueries {
         explode(sequence(lit(0), lit(3))).as("c"))
         .withColumn("chunk",
           expr("shiftright(simhash64, CAST(16 * c AS INT)) & 65535"))
-      val cand = graft.Par.pin(chunks, col("c"), col("chunk"))
+      val cand = chunks
         .groupBy("c", "chunk")
         .agg(collect_list(struct(col("doc_id"), col("simhash64")))
           .as("members"))

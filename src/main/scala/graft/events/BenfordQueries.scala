@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * Scale shape: one corpus scan → 9-row digit histogram (map-side
   * combined); everything after is 9-row arithmetic.
   */
-object BenfordQueries {
+object BenfordQueries extends graft.QueryModule {
 
   /** log10(1 + 1/d) for d = 1..9, as fixed literals (a runtime log10
     * would not be bit-portable across engines). */

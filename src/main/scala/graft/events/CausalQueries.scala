@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * countDistinct expands to one extra exchange); the DiD itself is
   * 4-row arithmetic broadcast back onto the cells.
   */
-object CausalQueries {
+object CausalQueries extends graft.QueryModule {
 
   /** χ² critical value at 1 df, α = 0.05 — the SRM alarm line. */
   val SrmChi2Crit95 = 3.841

@@ -18,13 +18,13 @@ import org.apache.spark.sql.functions._
   * activity⋈first_seen co-keyed on user_id, so the fact-sized join
   * reuses the aggregation's own hash partitioning.
   */
-object CohortQueries {
+object CohortQueries extends graft.QueryModule {
 
   private def withDay(s: SparkSession, dir: String): DataFrame =
     EventsQueries.events(s, dir)
       .withColumn("day", expr(s"ts div ${EventsQueries.DayUs}"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  private val coreQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // acquisition curve: per day the active users, the NEW users (first
     // ever appearance), and the cumulative user count — all integers,
     // exact on both engines
@@ -120,8 +120,7 @@ object CohortQueries {
         .agg(sum(when(col("arm") === 0, 1L).otherwise(0L)).as("a_n"),
           sum(when(col("arm") === 1, 1L).otherwise(0L)).as("b_n")))))
 
-  /** (queries continued) */
-  val moreQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  private val moreQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // DAU / WAU / stickiness per day: the engagement ratio every product
     // dashboard tracks. WAU(d) = distinct users over days [d-6, d] —
     // computed by fanning each DISTINCT (day, user) activity row out to
@@ -186,7 +185,7 @@ object CohortQueries {
     * the binned distributions; the bin width is the resolution contract.) */
   val KsCrit05 = 1.358 // c(α) for α = 0.05, two-sided large-sample
 
-  val oracle: Map[String, String] = Map(
+  private val coreOracle: Map[String, String] = Map(
     "events_new_users_curve" -> (s"WITH ${EventsQueries.eventsSql},\n" +
       s"""ed AS (SELECT ts // ${EventsQueries.DayUs} AS day, user_id FROM ev),
          |first_seen AS (
@@ -304,7 +303,7 @@ object CohortQueries {
          |                        / CAST(n_a * n_b AS DOUBLE)) AS rejected
          |FROM d""".stripMargin))
 
-  val moreOracle: Map[String, String] = Map(
+  private val moreOracle: Map[String, String] = Map(
     "events_dau_stickiness" -> (s"WITH ${EventsQueries.eventsSql},\n" +
       s"""ed AS (
          |  SELECT DISTINCT ts // ${EventsQueries.DayUs} AS day, user_id
@@ -333,4 +332,10 @@ object CohortQueries {
          |FROM dau d JOIN wau w ON d.day = w.day
          |JOIN span sp ON d.day = sp.day
          |ORDER BY d.day""".stripMargin))
+
+  // the map is declared in two halves to keep each initializer small;
+  // the registry sees their union
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    coreQueries ++ moreQueries
+  lazy val oracle: Map[String, String] = coreOracle ++ moreOracle
 }

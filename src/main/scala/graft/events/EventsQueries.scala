@@ -18,7 +18,7 @@ import org.apache.spark.sql.graft.shims
   * doubles are summed as DECIMAL(18,2) then converted, so no
   * float-summation-order issue exists on either engine.
   */
-object EventsQueries {
+object EventsQueries extends graft.QueryModule {
 
   val SessionGapUs: Long = 30L * 60 * 1000000L // 30 minutes
   val CmsDepth = 3 // count-min sketch rows
@@ -161,7 +161,7 @@ object EventsQueries {
           lit(64.0) * log(lit(64.0) / col("v").cast("double")))
           .otherwise(col("raw")))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  private val coreQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // tumbling 10-minute windows per event type: the batch form of a
     // watermarked streaming window agg; partial aggregation map-side, one
     // shuffle on (window, type)
@@ -476,7 +476,7 @@ object EventsQueries {
         max(col("pmx")).as("max_value"))
       .orderBy("event_type")
 
-  val moreQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  private val moreQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // incremental rollup maintenance (IVM): the stored per-type aggregate
     // state of all CLOSED days merges with the newest day's raw partition
     // — the day-over-day shape that never re-scans history. Here the
@@ -975,7 +975,7 @@ object EventsQueries {
   val SelCuts = Seq(25.0, 77.0, 150.5, 401.25)
 
   // lazy: eventsSql is declared below; a strict val would capture null
-  lazy val moreOracle: Map[String, String] = Map(
+  private lazy val moreOracle: Map[String, String] = Map(
     "events_rollup_merge" -> (s"WITH $eventsSql\n" +
       """SELECT event_type, count(*) AS n_events,
         |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE)
@@ -1374,7 +1374,7 @@ object EventsQueries {
       |  FROM events
       |)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  private val coreOracle: Map[String, String] = Map(
     "events_tumbling_agg" -> (s"WITH $eventsSql\n" +
       s"""SELECT (ts // $WindowUs) * $WindowUs AS window_start, event_type,
          |       count(*) AS n,
@@ -1660,4 +1660,10 @@ object EventsQueries {
 
     "events_join_card_est_mixed" -> joinCardEstSql(mixed = true),
   )
+
+  // the map is declared in two halves to keep each initializer small;
+  // the registry sees their union
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    coreQueries ++ moreQueries
+  lazy val oracle: Map[String, String] = coreOracle ++ moreOracle
 }

@@ -19,12 +19,12 @@ import org.apache.spark.sql.functions._
   * and retention already shuffle on, so in a multi-query pipeline the
   * exchange is reusable across all of them.
   */
-object JourneyQueries {
+object JourneyQueries extends graft.QueryModule {
 
   private def ev(s: SparkSession, dir: String): DataFrame =
     EventsQueries.events(s, dir)
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  private val coreQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // First-order Markov chain over event types: P(next | prev) estimated
     // from every consecutive pair in each user's time-ordered stream.
     // (ts, event_id) is a total order per user — fixture ts has duplicate
@@ -187,8 +187,7 @@ object JourneyQueries {
             .otherwise(lit(null).cast("double")).as("click_to_purchase"))
   }
 
-  /** (queries continued — merged into SparkEntry alongside [[queries]]) */
-  val moreQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  private val moreQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // time-to-convert: the distribution of first-view → first-purchase
     // delay within a (user, day), in 10-minute buckets with the
     // cumulative conversion share — the latency face of the funnel
@@ -473,4 +472,9 @@ object JourneyQueries {
          |       max(ts) - min(ts) AS duration_us
          |FROM sess GROUP BY user_id, session_idx
          |ORDER BY user_id, start_us""".stripMargin))
+
+  // the map is declared in two halves to keep each initializer small;
+  // the registry sees their union
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    coreQueries ++ moreQueries
 }

@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   * operation sequence), so every float is bit-identical on both
   * engines.
   */
-object LifecycleQueries {
+object LifecycleQueries extends graft.QueryModule {
 
   /** A repeat (user, type) event this close to its predecessor is a
     * retransmission, not a new signal — the batch form of

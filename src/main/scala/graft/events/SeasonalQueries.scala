@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * gaps are treated as consecutive observations with their TRUE
   * weekday (index-based time, calendar-correct seasonality).
   */
-object SeasonalQueries {
+object SeasonalQueries extends graft.QueryModule {
 
   val Alpha = "0.3"
   val Beta = "0.1"

@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   * retry reproduces identical partitions. Lineage matters at scale —
   * a lost shuffle block recomputes bit-identically.
   */
-object SkewQueries {
+object SkewQueries extends graft.QueryModule {
 
   /** Sub-partitions per key. At 100 TB size this to ceil(hot-key rows /
     * target-partition rows); 8 suffices to turn a 1-task straggler into

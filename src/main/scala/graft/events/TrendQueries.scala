@@ -19,7 +19,7 @@ import graft.oracle.Ora
   * BIGINT (bounds audited in comments) — so the doubles both engines
   * derive from them are bit-identical, the repo-wide oracle contract.
   */
-object TrendQueries {
+object TrendQueries extends graft.QueryModule {
 
   /** CUSUM decision threshold, in units of the series' own σ. */
   val CusumH = 4.0

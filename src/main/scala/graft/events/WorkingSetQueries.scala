@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   *
   * All counts are exact BIGINTs; hit rates are single divisions.
   */
-object WorkingSetQueries {
+object WorkingSetQueries extends graft.QueryModule {
 
   /** Cache capacities on the reported curve (distinct users resident). */
   val Capacities: Seq[Int] = Seq(16, 64, 256, 1024)

@@ -18,7 +18,7 @@ import graft.dedup.{DedupComponents, DedupQueries}
   * oracle-checked against the same recursive-CTE closure as the DataFrame
   * variant, proving the two implementations agree.
   */
-object GraphXAnalytics {
+object GraphXAnalytics extends graft.QueryModule {
 
   /** Connected components of an undirected (doc_a, doc_b) edge list via
     * GraphX; labels are the min vertex id, matching both the DataFrame

@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * src and dst (the PageRank treatment); for this bipartite purchase
   * graph the broadcast is strictly better.
   */
-object HitsQueries {
+object HitsQueries extends graft.QueryModule {
 
   val Iterations = 3
   val TopK = 10

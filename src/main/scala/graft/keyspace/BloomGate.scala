@@ -24,7 +24,7 @@ import graft.sketch.BloomBits
   * is the harness, not the serving path — at 100 TB the router runs
   * ONLY filter-test → conditional store read.
   */
-object BloomGate {
+object BloomGate extends graft.QueryModule {
 
   /** Filter bits per shard (2^18 = 32 KiB). At the sf0.1 state (~37 K
     * live keys/shard) that is n/m ≈ 0.14 → FP ≈ (1−e^{−kn/m})^k ≈ 6%;

@@ -14,7 +14,7 @@ import graft.oracle.Ora
   * DuckDB's default binary collation do too, so `>= start && < end` means the
   * same thing in all three systems.
   */
-object KeyspaceQueries {
+object KeyspaceQueries extends graft.QueryModule {
   private val RangeStart = "order:2"
   private val RangeEnd = "order:3"
   /** Keyset-pagination fixture: resume after this key, 50 keys per page. */

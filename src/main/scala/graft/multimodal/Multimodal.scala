@@ -70,7 +70,7 @@ case class AudioFp(doc_id: Long, n_windows: Long, fingerprint: Long)
   * vectorized/pandas UDF), the media-type partitioning, the quarantine
   * routing, and the downstream aggregation.
   */
-object Multimodal {
+object Multimodal extends graft.QueryModule {
 
   /** CODEC SEAM (audio/video only — images go through [[Ppm.parse]]):
     * derives features deterministically from the payload bytes so the

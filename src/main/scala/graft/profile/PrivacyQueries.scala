@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * All counts and class sizes are exact BIGINTs; rates are single
   * divisions of exact ints (ORACLE.md), so both engines agree bitwise.
   */
-object PrivacyQueries {
+object PrivacyQueries extends graft.QueryModule {
 
   /** Release threshold: a quasi-identifier class smaller than this is
     * suppressed. */

@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * included) — one uniform schema for any column mix, matching what the
   * profile is for: diffing a drop against the previous drop's profile.
   */
-object ProfileQueries {
+object ProfileQueries extends graft.QueryModule {
 
   /** documents columns profiled, in stack order. */
   val DocCols: Seq[String] = Seq("doc_id", "lang", "source", "text", "n_chars")

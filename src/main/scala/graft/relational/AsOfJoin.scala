@@ -57,7 +57,7 @@ object AsOfJoin {
 
 /** As-of query over the events fixture: each event joined to the user's
   * most recent signup event at or before it. */
-object AsOfQueries {
+object AsOfQueries extends graft.QueryModule {
   import graft.events.EventsQueries.events
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

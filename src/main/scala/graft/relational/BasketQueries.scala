@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * All rule metrics are single divisions of exact BIGINT counts
   * (c12·N ≤ 2³⁸ at sf0.1), so both engines agree bitwise (ORACLE.md).
   */
-object BasketQueries {
+object BasketQueries extends graft.QueryModule {
 
   /** Pairs below this basket count are noise. */
   val MinPairBaskets = 5

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * noise floor (~1e-16) makes the result partitioning-invariant AND
   * bit-equal to the unrolled-SQL oracle.
   */
-object PageRank {
+object PageRank extends graft.QueryModule {
 
   val Damping = 0.85
   val Iterations = 3

@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
   * aggregates lineitem FIRST (the 100 TB table folds to (part, supp)
   * before any join), then joins partsupp co-keyed.
   */
-object PartSuppQueries {
+object PartSuppQueries extends graft.QueryModule {
 
   val SuppPerPart = 4
   /** Q11 keeps parts worth more than this multiple of the MEAN part

@@ -37,7 +37,7 @@ object RangeJoin {
   * contains it — closing the loop with `events_sessionize` (each event
   * belongs to exactly one session, so per-session match counts must
   * reproduce the sessionizer's n_events). */
-object RangeJoinQueries {
+object RangeJoinQueries extends graft.QueryModule {
 
   val ChunkUs: Long = 10L * 60 * 1000000L
 

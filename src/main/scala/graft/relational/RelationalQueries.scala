@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * of float summation order (the per-row product is a single double op,
   * deterministic on both engines).
   */
-object RelationalQueries {
+object RelationalQueries extends graft.QueryModule {
 
   private[relational] def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")

@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   * count-then-filter materialization). Money stays DECIMAL(18,4) until
   * the final cast, so sums are associative-exact on both engines.
   */
-object TpchMoreQueries {
+object TpchMoreQueries extends graft.QueryModule {
 
   // shared with RelationalQueries: one home for the table reader, the
   // money-decimal contract, and the date-literal cast

@@ -39,7 +39,7 @@ import graft.text.{PipelineQueries, TextQueries}
   * are the ones `ret_result_dedup` / `ret_context_pack` pin, re-run here
   * on the FILTERED lists (original hybrid ranks order both passes).
   */
-object RagPipeline {
+object RagPipeline extends graft.QueryModule {
 
   import RetrievalQueries.{ContextBudget, QueryDocs, ResultDedupCos, TopK}
 

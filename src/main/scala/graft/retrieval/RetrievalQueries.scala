@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.oracle.Ora
+import graft.sim.Dot64
 import graft.sim.SimilarityQueries.cosine
 
 /** Ranked retrieval over the corpus — the serving-side counterpart of
@@ -47,7 +48,7 @@ import graft.sim.SimilarityQueries.cosine
   * query — parallelism = #queries there, but the rows entering it are
   * already candidate-sized, not corpus-sized.
   */
-object RetrievalQueries {
+object RetrievalQueries extends graft.QueryModule {
 
   /** Query-by-example document ids — present at every SF (min corpus:
     * 500 docs) and inside the embedded prefix at sf0.1 (2000 vectors
@@ -730,14 +731,9 @@ object RetrievalQueries {
     rows.groupByKey(_._1).flatMapGroups {
       (q: Long, it: Iterator[(Long, Long, Long, Double, Array[Float])]) =>
         val cs = it.toArray // ≤ TopK rows per query by construction
-        // strict left fold ((0 + x₁y₁) + x₂y₂) + … — Dot64's exact order
-        def dot(a: Array[Float], b: Array[Float]): Double = {
-          var i = 0; var acc = 0.0
-          while (i < a.length) { acc += a(i).toDouble * b(i).toDouble; i += 1 }
-          acc
-        }
         def cos(a: Array[Float], b: Array[Float]): Double =
-          dot(a, b) / (math.sqrt(dot(a, a)) * math.sqrt(dot(b, b)))
+          Dot64.dot(a, b) /
+            (math.sqrt(Dot64.dot(a, a)) * math.sqrt(Dot64.dot(b, b)))
         val byId = cs.map(c => c._3 -> c).toMap
         val simCache = scala.collection.mutable.Map.empty[(Long, Long), Double]
         def sim(x: Long, y: Long): Double =

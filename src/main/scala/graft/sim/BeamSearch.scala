@@ -45,7 +45,7 @@ import SimilarityQueries._
   * reproduces identical bits, so carrying the frontier into the
   * candidate set needs no visited-set bookkeeping.
   */
-object BeamSearch {
+object BeamSearch extends graft.QueryModule {
 
   /** Candidates kept per round — the `ef` of HNSW terminology. */
   val BeamWidth = 8

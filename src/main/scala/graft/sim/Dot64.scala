@@ -106,4 +106,24 @@ case class Dot64(left: Expression, right: Expression)
 object Dot64 {
   def dot64(a: Column, b: Column): Column =
     shims.column(Dot64(shims.expression(a), shims.expression(b)))
+
+  // The scalar kernel for executor-side Scala code (streaming state
+  // functions, in-group reranks): the expression's strict left fold
+  // ((0 + x₁y₁) + x₂y₂) + … with per-element double widening, so results
+  // are bit-identical to dot64. Callers pass equal-length arrays.
+  def dot(a: Array[Float], b: Array[Float]): Double = {
+    var acc = 0.0; var i = 0
+    while (i < a.length) { acc += a(i).toDouble * b(i).toDouble; i += 1 }
+    acc
+  }
+  def dot(a: Array[Float], b: Array[Double]): Double = {
+    var acc = 0.0; var i = 0
+    while (i < a.length) { acc += a(i).toDouble * b(i); i += 1 }
+    acc
+  }
+  def dot(a: Array[Double], b: Array[Double]): Double = {
+    var acc = 0.0; var i = 0
+    while (i < a.length) { acc += a(i) * b(i); i += 1 }
+    acc
+  }
 }

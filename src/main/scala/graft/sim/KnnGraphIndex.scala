@@ -48,7 +48,7 @@ import SimilarityQueries._
   * the touched-bucket literal list (≤ min(|delta|, 2^NumPlanes) = 256
   * values on this fixture geometry — spec-pinned in CollectBoundsSpec).
   */
-object KnnGraphIndex {
+object KnnGraphIndex extends graft.QueryModule {
 
   def indexPath(s: SparkSession, dir: String): String =
     graft.sources.IndexCache.path(s, dir, "knng", "embeddings", "vec_id")

@@ -21,7 +21,7 @@ import graft.oracle.Ora
   * Both phases use the ordered-fold dot product ([[Dot64]] /
   * `Ora.dotN`), so every cosine is bit-identical to the DuckDB oracle.
   */
-object MatryoshkaQueries {
+object MatryoshkaQueries extends graft.QueryModule {
 
   /** Leading dims scanned in phase 1 (the "stored prefix column"). */
   val PrefixDims = 16

@@ -22,7 +22,7 @@ import graft.oracle.Ora
   * All float math is double-precision ordered left-folds so results are
   * bit-identical to the DuckDB oracle (see [[graft.oracle.Ora.dot64]]).
   */
-object SimilarityQueries {
+object SimilarityQueries extends graft.QueryModule {
 
   val Dim = 64
   val NumPlanes = 8

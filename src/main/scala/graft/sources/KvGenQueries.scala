@@ -12,7 +12,7 @@ import graft.oracle.Ora
   * row id, so DuckDB reproduces the identical table from `range(n)`
   * and the connector's read path is oracle-gated like every operator.
   */
-object KvGenQueries {
+object KvGenQueries extends graft.QueryModule {
 
   /** Fixed generator size — the connector is sf-independent by design
     * (its input is the id space, not the fixture directory). */

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 
+import graft.sim.Dot64
 import graft.sim.SimilarityQueries.{PqM, PqSubDim}
 
 /** A vector arriving at the index. */
@@ -47,24 +48,6 @@ object AnnIngestStream {
     Quantizers(cents, cbs)
   }
 
-  // the three Dot64 folds, scalar: strict left fold, per-element
-  // double widening — bit-identical to the codegen'd expression
-  private def dotFF(a: Array[Float], b: Array[Float]): Double = {
-    var acc = 0.0; var i = 0
-    while (i < a.length) { acc += a(i).toDouble * b(i).toDouble; i += 1 }
-    acc
-  }
-  private def dotFD(a: Array[Float], b: Array[Double]): Double = {
-    var acc = 0.0; var i = 0
-    while (i < a.length) { acc += a(i).toDouble * b(i); i += 1 }
-    acc
-  }
-  private def dotDD(a: Array[Double], b: Array[Double]): Double = {
-    var acc = 0.0; var i = 0
-    while (i < a.length) { acc += a(i) * b(i); i += 1 }
-    acc
-  }
-
   /** Encode one arriving vector: coarse cell (max cosine, ties to the
     * smaller cell) + one PQ code per subspace (min squared distance,
     * ties to the smaller cluster). */
@@ -75,19 +58,19 @@ object AnnIngestStream {
     var bestCell = -1L
     var bestCos = Double.NegativeInfinity
     for ((cell, c) <- q.cells) {
-      val cos = dotFF(emb, c) /
-        (math.sqrt(dotFF(emb, emb)) * math.sqrt(dotFF(c, c)))
+      val cos = Dot64.dot(emb, c) /
+        (math.sqrt(Dot64.dot(emb, emb)) * math.sqrt(Dot64.dot(c, c)))
       if (cos > bestCos) { bestCos = cos; bestCell = cell }
     }
     (0 until PqM).map { j =>
       val slice = java.util.Arrays.copyOfRange(
         emb, j * PqSubDim, (j + 1) * PqSubDim)
-      val dvv = dotFF(slice, slice)
+      val dvv = Dot64.dot(slice, slice)
       // cluster: argmin (dist, cluster) — ascending scan, strict <
       var bestCluster = -1L
       var bestDist = Double.PositiveInfinity
       for (((sub, cluster), c) <- q.codebooks if sub == j) {
-        val d = (dvv - 2.0 * dotFD(slice, c)) + dotDD(c, c)
+        val d = (dvv - 2.0 * Dot64.dot(slice, c)) + Dot64.dot(c, c)
         if (d < bestDist) { bestDist = d; bestCluster = cluster }
       }
       IngestCode(v.vec_id, j, bestCluster, bestCell)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.dedup.DedupQueries
+import graft.sim.Dot64
 import graft.sim.SimilarityQueries
 
 /** One vector arriving at the kNN-graph index: the 8-bit LSH bucket it
@@ -54,13 +55,6 @@ object KnnGraphStream {
 
   val MaxPosting: Int = DedupQueries.MaxPosting
 
-  /** Strict left fold ((0 + x₁y₁) + x₂y₂) + … — Dot64's exact order. */
-  private def dot(a: Array[Float], b: Array[Float]): Double = {
-    var i = 0; var acc = 0.0
-    while (i < a.length) { acc += a(i).toDouble * b(i).toDouble; i += 1 }
-    acc
-  }
-
   /** Bucket state: accumulated members plus the generation counter. */
   case class BucketState(gen: Long,
       members: List[(Long, Long, Array[Float])])
@@ -91,14 +85,14 @@ object KnnGraphStream {
       val out: List[BucketPairEmit] =
         if (members.size >= 2 && members.size <= cap) {
           val nrm = members.map { case (id, _, e) =>
-            id -> math.sqrt(dot(e, e))
+            id -> math.sqrt(Dot64.dot(e, e))
           }.toMap
           for {
             (ia, la, ea) <- members
             (ib, lb, eb) <- members
             if ia != ib
           } yield BucketPairEmit(bucket, gen, alive = true, ia, la, ib, lb,
-            dot(ea, eb) / (nrm(ia) * nrm(ib)))
+            Dot64.dot(ea, eb) / (nrm(ia) * nrm(ib)))
         } else
           List(BucketPairEmit(bucket, gen, alive = false, -1L, -1L, -1L,
             -1L, 0.0))

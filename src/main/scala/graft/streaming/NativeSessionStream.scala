@@ -46,5 +46,5 @@ object NativeSessionStream {
 
   /** Batch twin over the fixture — used by the parity spec. */
   def batch(s: SparkSession, dir: String): DataFrame =
-    graft.events.JourneyQueries.moreQueries("events_session_native")(s, dir)
+    graft.events.JourneyQueries.queries("events_session_native")(s, dir)
 }

@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   * as the stratified-quota planner. Final floor division loses < 1 token
   * per unsaturated source, so B − Σ alloc < #sources (spec-asserted).
   */
-object BudgetQueries {
+object BudgetQueries extends graft.QueryModule {
 
   /** Availability cap: a source can be repeated at most this many epochs. */
   val EpochCap = 3L

@@ -17,7 +17,7 @@ import graft.oracle.Ora
   * min-count cut happens BEFORE the two unigram joins, so the joined
   * table is the (tiny) candidate set, and both unigram sides broadcast.
   */
-object CollocationQueries {
+object CollocationQueries extends graft.QueryModule {
 
   /** Pairs below this count are noise (a single shared sentence can
     * produce a sky-high ratio at count 1). */

@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   * invariant under permutations of equal frequencies, so rank ties
   * cannot produce cross-engine drift.
   */
-object DistributionQueries {
+object DistributionQueries extends graft.QueryModule {
 
   /** Rows kept in the Zipf head profile. */
   val ZipfHead = 64

@@ -26,7 +26,7 @@ import graft.oracle.Ora
   * doc_id (already the partition key), one per-doc aggregate — fully
   * map-local after the explode.
   */
-object MaskingQueries {
+object MaskingQueries extends graft.QueryModule {
 
   /** Span-start probability, in 1/10000ths. */
   val StartPerMyriad = 526

@@ -17,7 +17,7 @@ import graft.oracle.Ora
   * so every document gets exactly one verdict and the counts are a
   * partition of the corpus.
   */
-object PipelineQueries {
+object PipelineQueries extends graft.QueryModule {
 
   val QualityThreshold = 0.55
   val SampleRate = 10 // percent

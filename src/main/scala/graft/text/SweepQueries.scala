@@ -19,7 +19,7 @@ import graft.dedup.DedupQueries
   * — dup-rate-sized, orders of magnitude below corpus-sized — against a
   * two-column (doc_id, source) projection of the scan.
   */
-object SweepQueries {
+object SweepQueries extends graft.QueryModule {
 
   /** Quality-histogram resolution: bins of width 1/[[QBins]] over the
     * composite score's [0,1] range. floor(q·20) is exact on both engines

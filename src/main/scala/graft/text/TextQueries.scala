@@ -16,7 +16,7 @@ import graft.oracle.Ora
   * only wide stage is the final ORDER BY pinned for the oracle compare
   * (droppable in production).
   */
-object TextQueries {
+object TextQueries extends graft.QueryModule {
 
   /** PII patterns, shared by the flags audit and the redaction transform;
     * kept to the regex subset Java and RE2/DuckDB interpret identically. */

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** Safety contract for the drivers' between-queries reap (round-11
-  * verdict item 9): Bench/Verify unpersist every persistent RDD — in
+  * verdict item 9): `Session.reap` unpersists every persistent RDD — in
   * particular locally-checkpointed legs whose lineage is TRUNCATED and
   * cannot recompute — after each query's sink action completes. That is
   * only safe because nothing ever re-reads a released checkpoint: each
@@ -11,30 +11,22 @@ import org.apache.spark.sql.functions._
   * consumers of a leg execute under the single sink action before the
   * reap. This spec pins both halves, so the WARN Spark logs on those
   * unpersists ("locally checkpointed … cannot be recomputed") is
-  * provably informational here — and Bench silences it accordingly.
+  * provably informational here — and Session silences it accordingly.
   */
 class LocalCheckpointReleaseSpec extends SparkSpec {
-
-  private def reap(): Unit = {
-    Materialize.reapAll(spark)
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-  }
-
-  private def runNoop(df: org.apache.spark.sql.DataFrame): Unit =
-    df.write.format("noop").mode("overwrite").save()
 
   test("a Par.together query survives the bench lifecycle: " +
     "run → reap → fresh run, with no released checkpoint re-read") {
     val fn = SparkEntry.queries("ret_rrf_fusion")
-    runNoop(fn(spark, sf)) // first timed run, consumes its legs fully
-    reap()                 // the bench's between-runs release
+    Session.consume(fn(spark, sf)) // first run, consumes its legs fully
+    Session.reap(spark)            // the between-runs release
     // a fresh invocation must rebuild its own legs — if any code path
     // memoized a released checkpoint, this would throw the truncated-
     // lineage SparkException instead of recomputing
     val again = fn(spark, sf)
-    runNoop(again)
+    Session.consume(again)
     assert(again.count() > 0)
-    reap()
+    Session.reap(spark)
   }
 
   test("re-reading a frame whose checkpoint was released is the failure " +
@@ -45,7 +37,7 @@ class LocalCheckpointReleaseSpec extends SparkSpec {
     val ck = spark.range(100).select(col("id"),
       (col("id") * 2).as("v")).localCheckpoint()
     assert(ck.count() === 100)
-    reap()
+    Session.reap(spark)
     val failed =
       try { ck.count(); false }
       catch { case _: Throwable => true }

@@ -410,7 +410,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("daily anomaly: stats dimension broadcasts; no shuffle join") {
     val p = graft.events.EventsQueries
-      .moreQueries("events_anomaly_day")(spark, sf)
+      .queries("events_anomaly_day")(spark, sf)
       .queryExecution.executedPlan.toString
     assert(p.contains("BroadcastHashJoin"), p.take(3000))
     assert(!p.contains("SortMergeJoin"), "stats side must broadcast")
@@ -419,7 +419,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("quantile sketch reads the event scan exactly once") {
     val p = graft.events.EventsQueries
-      .moreQueries("events_quantile_sketch")(spark, sf)
+      .queries("events_quantile_sketch")(spark, sf)
       .queryExecution.executedPlan.toString
     val scans = "FileScan parquet".r.findAllIn(p).length
     assert(scans === 1, s"one-pass sketch requires 1 scan, got $scans")
@@ -458,7 +458,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("late arrivals: watermark series is batch-sized, events join broadcast") {
     val p = graft.events.EventsQueries
-      .moreQueries("events_late_arrivals")(spark, sf)
+      .queries("events_late_arrivals")(spark, sf)
       .queryExecution.executedPlan.toString
     // the O(#micro-batches) watermark table broadcasts back over the
     // event scan — the event side must never shuffle for the join

@@ -2,12 +2,16 @@ package graft
 
 /** Sweeping invariants over the whole driver contract:
   *
-  *   - every oracle entry names a registered query (a dangling oracle key
-  *     would make the driver's compare fail on a missing result dir);
+  *   - oracle keys equal query keys: every query has an oracle (the
+  *     oracle compare covers the whole board) and every oracle names a
+  *     registered query (a dangling key would fail on a missing result);
   *   - every query executes at sf0.001 and returns rows (the driver's
   *     smoke-level check), except the deliberate empty-result queries;
   *   - no query plans a CartesianProduct, except the whitelisted quadratic
   *     oracle baselines (documented as such).
+  *
+  * The execution sweep is one test per registry module, so a failure or
+  * a timeout names its family.
   */
 class QuerySweepSpec extends SparkSpec {
 
@@ -19,29 +23,37 @@ class QuerySweepSpec extends SparkSpec {
       // bounded sample × sample by construction (1-in-10 hash sample)
       "sim_cosine_calibration")
 
-  test("oracle keys are a subset of query keys") {
-    val dangling = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(dangling.isEmpty, s"oracles without queries: $dangling")
+  test("oracle keys equal query keys") {
+    val (queries, oracles) =
+      (SparkEntry.queries.keySet, SparkEntry.oracleSql.keySet)
+    assert((oracles -- queries).isEmpty,
+      s"oracles without queries: ${oracles -- queries}")
+    assert((queries -- oracles).isEmpty,
+      s"queries without oracles: ${queries -- oracles}")
   }
 
-  test("every query runs at sf0.001, returns rows, and avoids cartesian plans") {
-    val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        try {
-          val df = fn(spark, sf)
-          val plan = df.queryExecution.executedPlan.toString
-          val cartesian = plan.contains("CartesianProduct") &&
-            !quadraticBaselines.contains(name)
-          val n = df.count()
-          val empty = n == 0 && !mayBeEmpty.contains(name)
-          if (cartesian) Some(s"$name: CartesianProduct in plan")
-          else if (empty) Some(s"$name: returned 0 rows")
-          else None
-        } catch {
-          case e: Throwable => Some(s"$name: ${e.getMessage.take(120)}")
-        }
+  for (module <- SparkEntry.modules) {
+    val family = module.getClass.getSimpleName.stripSuffix("$")
+    test(s"every $family query runs at sf0.001, returns rows, " +
+      "and avoids cartesian plans") {
+      val failures = module.queries.toSeq.sortBy(_._1).flatMap {
+        case (name, fn) =>
+          try {
+            val df = fn(spark, sf)
+            val plan = df.queryExecution.executedPlan.toString
+            val cartesian = plan.contains("CartesianProduct") &&
+              !quadraticBaselines.contains(name)
+            val n = df.count()
+            val empty = n == 0 && !mayBeEmpty.contains(name)
+            if (cartesian) Some(s"$name: CartesianProduct in plan")
+            else if (empty) Some(s"$name: returned 0 rows")
+            else None
+          } catch {
+            case e: Throwable => Some(s"$name: ${e.getMessage.take(120)}")
+          }
+      }
+      assert(failures.isEmpty, failures.mkString("\n"))
     }
-    assert(failures.isEmpty, failures.mkString("\n"))
   }
 
   test("flagship entry() returns rows") {

@@ -3,16 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for all suites — one JVM-wide SparkSession. */
+/** Shared session for all suites — one JVM-wide SparkSession from the
+  * mains' factory, at a fixed 4 cores so results and plans do not
+  * follow the host's core count. */
 object SparkSpec {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session(4)
 }
 
 trait SparkSpec extends AnyFunSuite {

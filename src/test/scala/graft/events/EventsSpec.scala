@@ -66,7 +66,7 @@ class EventsSpec extends SparkSpec {
   }
 
   test("selectivity estimate: error bounded by the straddling bin, monotone") {
-    val rows = (EventsQueries.queries ++ EventsQueries.moreQueries)(
+    val rows = EventsQueries.queries(
       "events_selectivity_est")(spark, sf)
       .collect()
       .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2), r.getLong(3)))
@@ -126,7 +126,7 @@ class EventsSpec extends SparkSpec {
       .select("user_id", "ts").collect()
       .map(r => (r.getLong(1) / EventsQueries.DayUs, r.getLong(0)))
       .distinct.groupBy(_._1).map { case (d, xs) => d -> xs.map(_._2).toSet }
-    val got = EventsQueries.moreQueries("events_retention")(spark, sf)
+    val got = EventsQueries.queries("events_retention")(spark, sf)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     assert(got.map(_._1).toSet === daily.keySet)
@@ -158,7 +158,7 @@ class EventsSpec extends SparkSpec {
       d -> ((xs.map(_._2).sum.toLong, xs.map(_._3).sum.toLong,
         xs.map(_._4).sum.toLong))
     }
-    val got = EventsQueries.moreQueries("events_funnel")(spark, sf)
+    val got = EventsQueries.queries("events_funnel")(spark, sf)
       .collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3))))
       .toMap
@@ -241,10 +241,10 @@ class EventsSpec extends SparkSpec {
     assert(EventsQueries.events(spark, sf)
       .filter(col("event_type").isNull).count() === 0L,
       "fixture grew NULL event_type — key this law on gid instead")
-    val gs = EventsQueries.moreQueries("events_grouping_sets")(spark, sf)
+    val gs = EventsQueries.queries("events_grouping_sets")(spark, sf)
       .collect().map(r => (Option(r.getString(0)), Option(r.getString(1))) ->
         (r.getLong(3), r.getDouble(4))).toMap
-    val cube = EventsQueries.moreQueries("events_cube")(spark, sf)
+    val cube = EventsQueries.queries("events_cube")(spark, sf)
       .collect().map(r => (Option(r.getString(0)), Option(r.getString(1))) ->
         (r.getLong(2), r.getDouble(3))).toMap
     val bucketOnly = cube.keySet.filter { case (t, b) => t.isEmpty && b.nonEmpty }
@@ -254,7 +254,7 @@ class EventsSpec extends SparkSpec {
   }
 
   test("daily anomaly flags are exactly the |z| >= threshold days") {
-    val flagged = EventsQueries.moreQueries("events_anomaly_day")(spark, sf)
+    val flagged = EventsQueries.queries("events_anomaly_day")(spark, sf)
       .collect()
     assert(flagged.nonEmpty, "fixture boundary days must flag")
     flagged.foreach(r =>
@@ -278,7 +278,7 @@ class EventsSpec extends SparkSpec {
   }
 
   test("quantile sketch picks the bin holding the target order statistic") {
-    val est = EventsQueries.moreQueries("events_quantile_sketch")(spark, sf)
+    val est = EventsQueries.queries("events_quantile_sketch")(spark, sf)
       .collect()
       .map(r => ((r.getString(0), r.getDouble(1)), (r.getLong(2), r.getDouble(3))))
       .toMap
@@ -306,7 +306,7 @@ class EventsSpec extends SparkSpec {
   }
 
   test("late arrivals: only re-sequenced events can be late, none without") {
-    val rows = EventsQueries.moreQueries("events_late_arrivals")(spark, sf)
+    val rows = EventsQueries.queries("events_late_arrivals")(spark, sf)
       .collect()
     val ev = EventsQueries.events(spark, sf)
     assert(rows.map(_.getLong(1)).sum === ev.count(),
@@ -361,7 +361,7 @@ class EventsSpec extends SparkSpec {
       .flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum
     q.stop()
 
-    val nLate = EventsQueries.moreQueries("events_late_arrivals")(spark, sf)
+    val nLate = EventsQueries.queries("events_late_arrivals")(spark, sf)
       .collect().map(_.getLong(2)).sum
     assert(dropped === nLate,
       s"engine dropped $dropped, batch accounting says $nLate")
@@ -370,7 +370,7 @@ class EventsSpec extends SparkSpec {
   }
 
   test("gap histogram: power-of-two edges, totals tie to sessionization") {
-    val h = EventsQueries.moreQueries("events_gap_histogram")(spark, sf)
+    val h = EventsQueries.queries("events_gap_histogram")(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4)))
     val ev = EventsQueries.events(spark, sf)
@@ -392,7 +392,7 @@ class EventsSpec extends SparkSpec {
   }
 
   test("decayed counts: driver rerun of the shared age fold is bit-equal") {
-    val rows = EventsQueries.moreQueries("events_decayed_counts")(spark, sf)
+    val rows = EventsQueries.queries("events_decayed_counts")(spark, sf)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2),
         r.getLong(3), r.getLong(4)))
     assert(rows.nonEmpty)

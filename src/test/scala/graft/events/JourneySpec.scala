@@ -134,7 +134,7 @@ class JourneySpec extends SparkSpec {
   }
 
   test("conversion lag: conserves converting user-days; cum ends at 1") {
-    val rows = JourneyQueries.moreQueries("events_conversion_lag")(spark, sf)
+    val rows = JourneyQueries.queries("events_conversion_lag")(spark, sf)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     assert(rows.nonEmpty)
@@ -159,7 +159,7 @@ class JourneySpec extends SparkSpec {
     // boundary semantics differ only at ts - prev == gap exactly; the
     // fixture has no such event (µs grid vs 30-minute gap), so the two
     // must agree row-for-row on (user, start, n, duration)
-    val native = JourneyQueries.moreQueries("events_session_native")(spark, sf)
+    val native = JourneyQueries.queries("events_session_native")(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(2), r.getLong(1), r.getLong(3)))
     val lagged = EventsQueries.queries("events_sessionize")(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(3), r.getLong(2), r.getLong(4)))

@@ -188,11 +188,18 @@ class ExpressionLawSpec extends SparkSpec {
       Dot64.dot64(col("a"), col("b")).as("fast"),
       aggregate(zip_with(col("a"), col("b"),
         (x, y) => x.cast("double") * y.cast("double")),
-        lit(0.0), (acc, v) => acc + v).as("ref"))
+        lit(0.0), (acc, v) => acc + v).as("ref"),
+      col("a"), col("b"))
     val rows = df.collect()
     rows.foreach { r =>
       assert(java.lang.Double.doubleToLongBits(r.getDouble(0)) ===
         java.lang.Double.doubleToLongBits(r.getDouble(1)))
+      // the scalar kernel, on every element-type pairing it offers
+      val (a, b) = (r.getSeq[Float](2).toArray, r.getSeq[Float](3).toArray)
+      for (scalar <- Seq(Dot64.dot(a, b), Dot64.dot(a, b.map(_.toDouble)),
+          Dot64.dot(a.map(_.toDouble), b.map(_.toDouble))))
+        assert(java.lang.Double.doubleToLongBits(scalar) ===
+          java.lang.Double.doubleToLongBits(r.getDouble(0)))
     }
   }
 }

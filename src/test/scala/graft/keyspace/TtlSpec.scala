@@ -70,7 +70,7 @@ class TtlSpec extends SparkSpec {
 
   test("dau stickiness: bounds and full-week agreement with direct counts") {
     val rows = graft.events.CohortQueries
-      .moreQueries("events_dau_stickiness")(spark, sf).collect()
+      .queries("events_dau_stickiness")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getDouble(4)))
     assert(rows.nonEmpty)

@@ -15,8 +15,9 @@ class BucketingSpec extends SparkSpec {
     // the catalog is in-memory but the warehouse dirs persist across JVMs
     for (t <- Seq("li_bucketed", "ord_bucketed")) {
       spark.sql(s"DROP TABLE IF EXISTS $t")
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(s"/tmp/graft_warehouse/$t"))
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(
+        spark.sessionState.catalog.defaultTablePath(
+          org.apache.spark.sql.catalyst.TableIdentifier(t))))
     }
     val li = spark.read.parquet(s"$sf/lineitem.parquet")
       .select("l_orderkey", "l_quantity")

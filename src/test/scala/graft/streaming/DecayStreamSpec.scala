@@ -20,7 +20,7 @@ class DecayStreamSpec extends SparkSpec {
       r.getString(3), r.getDouble(4)))
 
   private lazy val batch: Map[String, (Long, Double)] =
-    EventsQueries.moreQueries("events_decayed_counts")(spark, sf)
+    EventsQueries.queries("events_decayed_counts")(spark, sf)
       .collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2))).toMap
 
