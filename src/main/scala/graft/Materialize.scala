@@ -3,15 +3,20 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
-/** The single eager-materialization idiom for the iterative families
-  * (PageRank, connected components, BFS/SSSP, HITS, BPE training, PQ
-  * k-means, the eigvec power iteration) — one place that names the
-  * fault-tolerance trade the per-site `localCheckpoint()` calls used to
-  * make implicitly:
+/** The single eager-materialization idiom for the iterative families —
+  * one place that names the fault-tolerance trade the per-site
+  * `localCheckpoint()` calls used to make implicitly. The superstep
+  * loops run on [[iterate]]: converged PageRank, label-propagation
+  * connected components, weighted SSSP, the kNN k-core peel, k-means
+  * (`sim_kmeans_cells`), the PQ codebooks and BPE training
+  * (`text_bpe_train` and the persisted tokenizer's build). The loops
+  * that call [[apply]]/[[release]] by hand are star contraction, BFS and
+  * HITS (a second barrier inside each round) and the eigvec power
+  * iteration (it materializes after every 8th step, not before a probe).
   *
   *   - `local` (default): `localCheckpoint()` — blocks live on
   *     executor-local disk with TRUNCATED, unrecomputable lineage. On
-  *     local[32] (one JVM) this is strictly the right call: cheapest
+  *     local[N] (one JVM) this is strictly the right call: cheapest
   *     materialization, keeps AQE stats, and "executor loss" means the
   *     whole process died anyway. On a preemptible multi-executor
   *     cluster, ONE lost executor fails the query — hence the switch.
@@ -47,17 +52,20 @@ import org.apache.spark.storage.StorageLevel
   * Spark's CacheManager holds STRONG references to cached plans until
   * an explicit unpersist, so dropped frames are never reclaimed by GC.
   * The contract is therefore explicit and two-level:
-  *   1. loops [[release]] each superseded round's frame as soon as the
-  *      next round is materialized (bounds WITHIN-query growth to the
-  *      live frontier), and
+  *   1. [[iterate]] releases each superseded round's frame as soon as
+  *      the next round is materialized, and the hand-rolled loops
+  *      [[release]] theirs the same way (bounds WITHIN-query growth to
+  *      the live frontier), and
   *   2. the mains call [[Session.reap]] (which runs [[reapAll]])
   *      once a query's result has been written/consumed (bounds
   *      ACROSS-query growth to zero).
   * A long-lived session that embeds the library directly owns step 2:
   * without a reap it retains O(frames-per-query) MEMORY_AND_DISK
   * entries per invocation (each loop's final frame plus never-released
-  * inputs). Releasing is always SAFE in this mode — lineage is kept, so
-  * a released frame consumed later recomputes from its parents.
+  * inputs, plus in-round barriers a step makes itself, such as the
+  * k-core keep set). Releasing is always SAFE in this mode — lineage
+  * is kept, so a released frame consumed later recomputes from its
+  * parents.
   *
   * Deliberately NOT wired into the one-shot (non-iterative) pipeline
   * stages: those use `localCheckpoint()` for scheduler-dedup within a
@@ -126,6 +134,39 @@ object Materialize {
           s"${System.getProperty("java.io.tmpdir")}/graft-checkpoints"))
       }
       df.checkpoint()
+  }
+
+  /** The superstep loop: materialize `init`, then run `step` for at most
+    * `maxRounds` rounds. Round `i` is a probe round when
+    * `i % probeEvery == 0` or `i == maxRounds`; between probes the steps
+    * stay lazy. A probe round materializes the current state (unless it
+    * already is), materializes `next = step(cur)`, and stops the loop
+    * when `converged(cur, next)` — both frames are materialized when it
+    * runs. Each superseded materialized frame is [[release]]d as soon as
+    * its successor exists; the final one stays for [[Session.reap]].
+    * Returns the final (materialized) state and the rounds run,
+    * including the one that converged. Fixed-count loops pass
+    * `(_, _) => false`; signatures carried across rounds live in the
+    * caller's `converged` closure. */
+  def iterate(init: DataFrame, maxRounds: Int, probeEvery: Int = 1)(
+      step: DataFrame => DataFrame)(
+      converged: (DataFrame, DataFrame) => Boolean): (DataFrame, Int) = {
+    var cur = apply(init)
+    var mat = cur // the newest materialized frame; `cur` is lazy over it
+    var rounds = 0
+    var done = false
+    while (!done && rounds < maxRounds) {
+      rounds += 1
+      if (rounds % probeEvery == 0 || rounds == maxRounds) {
+        if (!(cur eq mat)) { cur = apply(cur); release(mat); mat = cur }
+        val next = apply(step(cur))
+        done = converged(cur, next)
+        release(mat)
+        mat = next
+        cur = next
+      } else cur = step(cur)
+    }
+    (cur, rounds)
   }
 
   /** Release a frame previously materialized by [[apply]] once the loop

@@ -39,35 +39,30 @@ object DedupComponents extends graft.QueryModule {
       .distinct()
       .transform(graft.Materialize(_))
 
+  /** Round cap shared by the label-propagation, star-contraction and
+    * BFS loops: a runaway guard, far above the few rounds near-dup
+    * components need. */
+  val MaxRounds = 50
+
   private def componentsFromAdj(adj: DataFrame): DataFrame = {
-    var labels = adj.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id"))
-      .transform(graft.Materialize(_))
-    // the materialized frame backing `labels` (labels itself becomes a
-    // cheap projection of it after round 1) — released once superseded,
-    // so persist-mode loops don't accumulate every round's cache
-    var mat = labels
+    // carry a changed flag instead of re-joining the old labels: one
+    // materialization (localCheckpoint) and one cheap count per round
     var changed = 1L
-    var rounds = 0
-    while (changed > 0 && rounds < 50) {
+    val (labels, rounds) = graft.Materialize.iterate(
+        adj.select(col("src").as("id")).distinct()
+          .withColumn("label", col("id")), MaxRounds) { labels =>
       val nbrMin = adj
-        .join(labels.withColumnRenamed("id", "dst_id"),
+        .join(labels.select(col("id").as("dst_id"), col("label")),
           col("dst") === col("dst_id"))
         .groupBy(col("src")).agg(min(col("label")).as("nbr_label"))
-      // carry a changed flag instead of re-joining the old labels: one
-      // materialization (localCheckpoint) and one cheap count per round
-      val next = labels
+      val label = least(col("label"), coalesce(col("nbr_label"), col("label")))
+      labels
         .join(nbrMin.withColumnRenamed("src", "id"), Seq("id"), "left")
-        .select(col("id"),
-          least(col("label"), coalesce(col("nbr_label"), col("label")))
-            .as("new_label"),
-          col("label").as("old_label"))
-        .transform(graft.Materialize(_))
-      changed = next.filter(col("new_label") =!= col("old_label")).count()
-      graft.Materialize.release(mat)
-      mat = next
-      labels = next.select(col("id"), col("new_label").as("label"))
-      rounds += 1
+        .select(col("id"), label.as("label"),
+          (label =!= col("label")).as("changed"))
+    } { (_, next) =>
+      changed = next.filter(col("changed")).count()
+      changed == 0L
     }
     // The round cap is a runaway guard, not a silent truncation: the
     // documented loudness contract (a too-small oracle unroll mismatches
@@ -128,7 +123,7 @@ object DedupComponents extends graft.QueryModule {
     // order-free edge-set signature: count + XOR-checksum of the
     // canonical pairs (XOR never overflows under ANSI mode; the pairs are
     // distinct so cancellation can't mask a change; collision odds ~2^-64
-    // and the 50-round cap backstops even that); carried across rounds so
+    // and the round cap backstops even that); carried across rounds so
     // each round pays ONE tiny agg job
     def signature(df: DataFrame): (Long, Long) = {
       val r = df
@@ -140,7 +135,7 @@ object DedupComponents extends graft.QueryModule {
     var sig = signature(e)
     var rounds = 0
     var converged = sig._1 == 0L
-    while (!converged && rounds < 50) {
+    while (!converged && rounds < MaxRounds) {
       // large-star: per node x, m = min(N(x) ∪ {x}); edge (nbr, m) for
       // every nbr > x. m ≤ x < nbr keeps the (lo, hi) orientation.
       val adj = e.select(col("lo").as("x"), col("hi").as("nbr"))
@@ -210,7 +205,7 @@ object DedupComponents extends graft.QueryModule {
     var frontier = reached
     var grew = true
     var rounds = 0
-    while (grew && rounds < 50) {
+    while (grew && rounds < MaxRounds) {
       val next = adj
         .join(frontier.withColumnRenamed("id", "src_id"),
           col("src") === col("src_id"))
@@ -264,10 +259,6 @@ object DedupComponents extends graft.QueryModule {
       .unionByName(
         e.select(col("doc_b").as("s"), col("doc_a").as("d"), wgt.as("w")))
       .transform(graft.Materialize(_))
-    var dist = componentsFromAdj(adjacency(e.select("doc_a", "doc_b")))
-      .filter(col("doc_id") === col("component"))
-      .select(col("doc_id").as("id"), lit(0L).as("dist"))
-      .transform(graft.Materialize(_))
     // order-free table signature: (row count, exact integer dist sum) —
     // both monotone under relaxation, so equality is a fixed point
     def sig(df: DataFrame): (Long, Long) = {
@@ -275,22 +266,22 @@ object DedupComponents extends graft.QueryModule {
         .collect()(0)
       (r.getLong(0), r.getLong(1))
     }
-    var s0 = sig(dist)
-    var rounds = 0
-    var converged = s0._1 == 0L
-    while (!converged && rounds < SsspMaxHops) {
+    var s0: (Long, Long) = null // carried: each round signs only `next`
+    val (dist, rounds) = graft.Materialize.iterate(
+        componentsFromAdj(adjacency(e.select("doc_a", "doc_b")))
+          .filter(col("doc_id") === col("component"))
+          .select(col("doc_id").as("id"), lit(0L).as("dist")),
+        SsspMaxHops) { dist =>
       val relaxed = und
         .join(dist.withColumnRenamed("id", "sid"), col("s") === col("sid"))
         .select(col("d").as("id"), (col("dist") + col("w")).as("dist"))
-      val next = dist.unionByName(relaxed)
-        .groupBy("id").agg(min("dist").as("dist"))
-        .transform(graft.Materialize(_))
+      dist.unionByName(relaxed).groupBy("id").agg(min("dist").as("dist"))
+    } { (dist, next) =>
+      if (s0 == null) s0 = sig(dist)
       val s1 = sig(next)
-      converged = s1 == s0
+      val same = s1 == s0
       s0 = s1
-      graft.Materialize.release(dist)
-      dist = next
-      rounds += 1
+      same
     }
     (dist.select(col("id").as("doc_id"),
       (col("dist").cast("double") / lit(SsspFp)).as("dist"))
@@ -527,7 +518,7 @@ object DedupComponents extends graft.QueryModule {
          |  WHERE is_canonical
          |  UNION
          |  SELECT u.d, b.hops + 1 FROM und u JOIN bfs b ON u.s = b.id
-         |  WHERE b.hops < 50
+         |  WHERE b.hops < $MaxRounds
          |)
          |SELECT id AS doc_id, CAST(min(hops) AS BIGINT) AS hops
          |FROM bfs GROUP BY id ORDER BY doc_id""".stripMargin),

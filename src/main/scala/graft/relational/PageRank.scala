@@ -207,36 +207,22 @@ object PageRank extends graft.QueryModule {
         col("node").as("dst"), lit(1L).as("deg"), lit(0.0).as("w")))
       .transform(graft.Materialize(_))
     val n = nodes.count()
-    var r = nodes.select(col("node"), round(lit(1.0) / n, 12).as("pr"))
-      .transform(graft.Materialize(_))
-    // the newest materialized frame backing `r` (between probes `r` is a
-    // lazy chain over it) — released once a later probe supersedes it, so
-    // persist mode doesn't cache every probe segment forever
-    var lastMat = r
-    var iters = 0
-    var converged = false
-    while (!converged && iters < ConvergeMaxIters) {
-      iters += 1
-      // convergence is probed every [[ConvergeCheckEvery]] iterations,
-      // not every one: past the exact fixed point further iterations are
-      // the IDENTITY on the rounded grid — running up to CheckEvery-1
-      // extra identity steps is bit-harmless (the oracle unrolls to the
-      // cap). Between probes the steps stay LAZY; a probe round
-      // materializes the segment in exactly two fused jobs (the first
-      // CheckEvery−1 steps, checkpointed BEFORE the probe step, then
-      // the probe step itself) and the delta is a tiny node-sized join
-      // over the two checkpoints. Round 12 measured the alternatives:
-      // a fused single-materialization probe (carry prev_pr through the
-      // step) and a deeper cadence both LOST — under AQE every shuffle
-      // stage of the lazy segment is its own job, so the per-step
-      // exchange count, not the probe count, drives the job total.
-      val isProbe =
-        iters % ConvergeCheckEvery == 0 || iters == ConvergeMaxIters
-      if (isProbe) {
-        r = r.transform(graft.Materialize(_))
-        graft.Materialize.release(lastMat)
-        lastMat = r
-      }
+    // convergence is probed every [[ConvergeCheckEvery]] iterations, not
+    // every one: past the exact fixed point further iterations are the
+    // IDENTITY on the rounded grid — running up to CheckEvery-1 extra
+    // identity steps is bit-harmless (the oracle unrolls to the cap).
+    // Between probes the steps stay LAZY; a probe round materializes the
+    // segment in exactly two fused jobs (the first CheckEvery−1 steps,
+    // checkpointed BEFORE the probe step, then the probe step itself)
+    // and the delta is a tiny node-sized join over the two checkpoints.
+    // Round 12 measured the alternatives: a fused single-materialization
+    // probe (carry prev_pr through the step) and a deeper cadence both
+    // LOST — under AQE every shuffle stage of the lazy segment is its own
+    // job, so the per-step exchange count, not the probe count, drives
+    // the job total.
+    graft.Materialize.iterate(
+        nodes.select(col("node"), round(lit(1.0) / n, 12).as("pr")),
+        ConvergeMaxIters, ConvergeCheckEvery) { r =>
       // one step = one join + one aggregate (self-loop rows carry each
       // node's 0.0 term, so the aggregate is already complete over the
       // node set — no second join). The ranks side is explicitly
@@ -244,25 +230,17 @@ object PageRank extends graft.QueryModule {
       // join both sides' shuffle stages (Profile: 111 → 99 jobs; the
       // remaining floor is the per-step aggregate exchange plus the
       // broadcast build, each its own scheduler round-trip under AQE).
-      val next = eDeg.join(broadcast(r), eDeg("src") === r("node"))
+      eDeg.join(broadcast(r), eDeg("src") === r("node"))
         .groupBy(col("dst"))
         .agg(round(lit((1.0 - Damping)) / n +
           lit(Damping) * sum(col("w") * col("pr") / col("deg")), 12)
           .as("pr"))
         .select(col("dst").as("node"), col("pr"))
-      if (isProbe) {
-        val nextC = next.transform(graft.Materialize(_))
-        val delta = nextC.alias("na")
-          .join(r.alias("ob"), col("na.node") === col("ob.node"))
-          .agg(max(abs(col("na.pr") - col("ob.pr"))).as("d"))
-          .collect()(0).getDouble(0)
-        converged = delta == 0.0
-        graft.Materialize.release(lastMat)
-        lastMat = nextC
-        r = nextC
-      } else r = next
+    } { (ob, na) =>
+      na.alias("na").join(ob.alias("ob"), col("na.node") === col("ob.node"))
+        .agg(max(abs(col("na.pr") - col("ob.pr"))).as("d"))
+        .collect()(0).getDouble(0) == 0.0
     }
-    (r, iters)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

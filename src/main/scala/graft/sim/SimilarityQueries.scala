@@ -306,27 +306,25 @@ object SimilarityQueries extends graft.QueryModule {
       .select(least(col("vec_id"), col("nbr")).as("a"),
         greatest(col("vec_id"), col("nbr")).as("b"))
       .distinct()
-      .localCheckpoint()
-    var edges = canon
-      .select(col("a").as("src"), col("b").as("dst"))
-      .unionByName(canon.select(col("b").as("src"), col("a").as("dst")))
-      .localCheckpoint()
-    var n = edges.count()
-    var stable = false
-    var iters = 0
-    while (!stable && iters < KCoreMaxIters) {
-      iters += 1
+      .transform(graft.Materialize(_))
+    var n = -1L // carried edge count: each round counts only `next`
+    val (edges, iters) = graft.Materialize.iterate(
+        canon.select(col("a").as("src"), col("b").as("dst"))
+          .unionByName(canon.select(col("b").as("src"), col("a").as("dst"))),
+        KCoreMaxIters) { edges =>
+      // in-round barrier: the keep set feeds both semi-joins
       val keep = edges.groupBy("src").agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= KCoreK).select(col("src").as("v"))
-        .localCheckpoint()
-      val next = edges
+        .transform(graft.Materialize(_))
+      edges
         .join(keep, edges("src") === keep("v"), "left_semi")
         .join(keep, edges("dst") === keep("v"), "left_semi")
-        .localCheckpoint()
+    } { (edges, next) =>
+      if (n < 0) n = edges.count()
       val m = next.count()
-      stable = m == n
+      val stable = m == n
       n = m
-      edges = next
+      stable
     }
     (edges.groupBy(col("src").as("vec_id"))
       .agg(count(lit(1)).as("core_degree"))
@@ -505,19 +503,12 @@ object SimilarityQueries extends graft.QueryModule {
     * broadcast join, and an un-materialized broadcast build side re-runs
     * its whole upstream once per consumer. */
   private[sim] def pqCodebooks(vecs: DataFrame, seedOffset: Long = 0L): DataFrame = {
-    var cents = vecs
+    val seeds = vecs
       .filter(col("vec_id") >= seedOffset && col("vec_id") < seedOffset + PqK)
       .select(col("sub"), (col("vec_id") - lit(seedOffset)).cast("long")
         .as("cluster"), col("embedding").as("c"))
-      .transform(graft.Materialize(_))
-    for (_ <- 1 to PqIters) {
-      val prev = cents
-      cents = pqUpdate(pqAssign(vecs, cents), vecs)
-        .transform(graft.Materialize(_))
-      // persist-mode hygiene: round i's codebook supersedes round i-1's
-      graft.Materialize.release(prev)
-    }
-    cents
+    graft.Materialize.iterate(seeds, PqIters)(
+      cents => pqUpdate(pqAssign(vecs, cents), vecs))((_, _) => false)._1
   }
 
   /** Joint nearest-codeword assignment with the winning distance: the
@@ -809,16 +800,11 @@ object SimilarityQueries extends graft.QueryModule {
     "sim_kmeans_cells" -> ((s, dir) => {
       val vecs = emb(s, dir).select("vec_id", "embedding")
         .transform(graft.Materialize(_))
-      var cents = vecs.filter(col("vec_id") < KmeansK)
+      val seeds = vecs.filter(col("vec_id") < KmeansK)
         .select(col("vec_id").cast("long").as("cluster"),
           col("embedding").as("c"))
-        .transform(graft.Materialize(_))
-      for (_ <- 1 to KmeansIters) {
-        val prev = cents
-        cents = kmeansUpdate(kmeansAssign(vecs, cents), vecs)
-          .transform(graft.Materialize(_))
-        graft.Materialize.release(prev) // superseded round
-      }
+      val (cents, _) = graft.Materialize.iterate(seeds, KmeansIters)(
+        cents => kmeansUpdate(kmeansAssign(vecs, cents), vecs))((_, _) => false)
       kmeansAssign(vecs, cents)
         .groupBy("cluster").agg(count("*").as("n_members"))
         .join(cents.select(col("cluster"),

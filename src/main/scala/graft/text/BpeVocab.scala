@@ -35,15 +35,12 @@ object BpeVocab {
   /** Run the training loop (identical math to `text_bpe_train`) and
     * persist the ordered merge list: (iter, pair, repl). */
   def build(s: SparkSession, dir: String, path: String): Unit = {
-    // iterative loop → graft.Materialize (mode-selectable fault
-    // tolerance); each round's vocab supersedes the previous one, which
-    // is released as soon as the new round is materialized
-    var v = s.read.parquet(s"$dir/documents.parquet")
+    val vocab = s.read.parquet(s"$dir/documents.parquet")
       .select(explode(split(col("text"), " ")).as("w"))
       .groupBy("w").agg(count("*").as("freq"))
       .select(bracketed(col("w")).as("r"), col("freq"))
-      .transform(graft.Materialize(_))
-    val rows = (1 to BpeTrainIters).map { i =>
+    val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String)]
+    graft.Materialize.iterate(vocab, BpeTrainIters) { v =>
       val pair = v
         .select(col("freq"),
           expr("split(substring(r, 2, length(r) - 2), '><')").as("syms"))
@@ -56,18 +53,13 @@ object BpeVocab {
         .orderBy(col("n").desc, col("pair")).limit(1)
         .head().getString(0)
       val repl = pair.replace("><", "")
-      val prev = v
-      v = v.select(
-          call_function("replace", col("r"), lit(pair), lit(repl)).as("r"),
-          col("freq"))
-        .transform(graft.Materialize(_))
-      graft.Materialize.release(prev)
-      (i.toLong, pair, repl)
-    }
-    // the merges are driver-side rows; the final vocab frame is dead
-    graft.Materialize.release(v)
+      rows += ((rows.size + 1L, pair, repl))
+      v.select(
+        call_function("replace", col("r"), lit(pair), lit(repl)).as("r"),
+        col("freq"))
+    }((_, _) => false)
     import s.implicits._
-    rows.toDF("iter", "pair", "repl").coalesce(1)
+    rows.toSeq.toDF("iter", "pair", "repl").coalesce(1)
       .write.mode("overwrite").parquet(s"$path/merges")
   }
 

@@ -191,15 +191,18 @@ object TextQueries extends graft.QueryModule {
     "text_bpe_tokenize_served" -> ((s, dir) => BpeVocab.tokenizeServed(s, dir)),
 
     "text_bpe_train" -> ((s, dir) => {
-      var vocab = docs(s, dir)
+      val vocab = docs(s, dir)
         .select(explode(split(col("text"), " ")).as("w"))
         .groupBy("w").agg(count("*").as("freq"))
         .select(expr(
             "concat_ws('', transform(split(w, ''), c -> concat('<', c, '>')))")
           .as("r"), col("freq"))
-        .localCheckpoint()
-      val iterRows = (1 to BpeTrainIters).map { i =>
-        val top = vocab
+      // one row per round: the round's winner (`top`, made in the step)
+      // and the symbol total of the vocab it produced
+      var top: DataFrame = null
+      val iterRows = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      graft.Materialize.iterate(vocab, BpeTrainIters) { vocab =>
+        top = vocab
           .select(col("freq"),
             expr("split(substring(r, 2, length(r) - 2), '><')").as("syms"))
           .select(col("freq"), explode(when(size(col("syms")) >= 2,
@@ -209,18 +212,20 @@ object TextQueries extends graft.QueryModule {
               .otherwise(array().cast("array<string>"))).as("pair"))
           .groupBy("pair").agg(sum("freq").as("n"))
           .orderBy(col("n").desc, col("pair")).limit(1)
-          .localCheckpoint()
-        vocab = vocab.crossJoin(broadcast(top))
+          .transform(graft.Materialize(_))
+        vocab.crossJoin(broadcast(top))
           .select(expr("replace(r, pair, replace(pair, '><', ''))").as("r"),
             col("freq"))
-          .localCheckpoint()
+      } { (_, vocab) =>
         val symTotal = vocab.agg(
           sum(col("freq") *
             (length(col("r")) - length(expr("replace(r, '<', '')"))))
             .as("total_symbols"))
-        top.crossJoin(symTotal)
-          .select(lit(i.toLong).as("iter"), col("pair").as("merge_pair"),
-            col("n").as("n_occurrences"), col("total_symbols"))
+        iterRows += top.crossJoin(symTotal)
+          .select(lit(iterRows.size + 1L).as("iter"),
+            col("pair").as("merge_pair"), col("n").as("n_occurrences"),
+            col("total_symbols"))
+        false
       }
       iterRows.reduce(_ unionByName _).orderBy("iter")
     }),

@@ -8,8 +8,9 @@ import org.apache.spark.sql.functions._
   * checkpoint) must be pure execution-strategy choices — bit-identical
   * results on the iterative families that use the helper. Runs the
   * connected-components family (label propagation + star contraction +
-  * SSSP all route through Materialize) and the convergence-driven
-  * PageRank under each mode and compares collected rows exactly.
+  * SSSP all route through Materialize), HITS, k-means, the k-core peel,
+  * BPE training and the convergence-driven PageRank under each mode
+  * and compares collected rows exactly.
   */
 class MaterializeSpec extends SparkSpec {
 
@@ -76,18 +77,43 @@ class MaterializeSpec extends SparkSpec {
   test("persist mode: loops release superseded rounds; reapAll drains the rest") {
     withMode("persist") {
       import spark.implicits._
-      val edges = Seq(
-        (1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L), (10L, 12L))
-        .toDF("doc_a", "doc_b")
-      assert(rows(dedup.DedupComponents.components(edges)).nonEmpty)
-      // the loop's live frontier (result + never-released inputs) is
-      // still pinned — the reap is what drains it, and it must drain
-      // EVERYTHING: a second reap has nothing left to do
-      assert(Materialize.reapAll(spark) > 0,
+      // frames left registered after one components run: a loop that
+      // releases its superseded rounds leaves the same number whatever
+      // the round count, so a 4-chain and a 12-chain must agree
+      def leftAfter(chainLen: Int): Int = {
+        Materialize.reapAll(spark) // start from an empty registry
+        val edges = (1 until chainLen).map(i => (i.toLong, i + 1L))
+          .toDF("doc_a", "doc_b")
+        val got = rows(dedup.DedupComponents.components(edges))
+        assert(got.size === chainLen)
+        Materialize.reapAll(spark)
+      }
+      val short = leftAfter(4)
+      val long = leftAfter(12)
+      assert(short > 0,
         "the loop should have left registered persist-mode frames")
+      assert(long === short,
+        s"a longer chain left $long frames vs $short: rounds leaked")
+      // the reap drains EVERYTHING: a second reap has nothing left to do
       assert(Materialize.reapAll(spark) === 0,
         "reapAll must drain the registry completely")
     }
+  }
+
+  test("k-core peel and BPE training are bit-identical under all three modes") {
+    val got = Seq("local", "persist", "reliable").map { m =>
+      m -> withMode(m) {
+        val (core, rounds) = sim.SimilarityQueries.knnKCoreWithRounds(spark, sf)
+        val bpe = text.TextQueries.queries("text_bpe_train")(spark, sf)
+        (rows(core), rounds, rows(bpe))
+      }
+    }.toMap
+    Materialize.reapAll(spark) // the per-query reap the mains run
+    assert(got("persist") === got("local"))
+    assert(got("reliable") === got("local"))
+    val (core, rounds, bpe) = got("local")
+    assert(core.nonEmpty && bpe.nonEmpty)
+    assert(rounds === 2, s"peel depth moved: $rounds rounds")
   }
 
   test("release acts on what apply did, not the conf at release time") {
