@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Pins the [[Materialize]] mode switch: the three fault-tolerance
   * postures (local checkpoint / lineage-kept persist / reliable
@@ -119,10 +120,15 @@ class MaterializeSpec extends SparkSpec {
   test("release acts on what apply did, not the conf at release time") {
     import spark.implicits._
     val df = Seq((1L, 2L)).toDF("a", "b")
+    // drain what earlier tests left, so the registry holds only this frame
+    Materialize.reapAll(spark)
     val m = withMode("persist") { Materialize(df) }
+    assert(df.storageLevel !== StorageLevel.NONE, "persist mode must cache the frame")
     // flip the mode away BEFORE releasing: release must still unpersist
     // the frame apply() persisted (membership-based, not mode-based)
     withMode("local") { Materialize.release(m) }
+    assert(df.storageLevel === StorageLevel.NONE,
+      "release left the frame cached after a runtime mode flip")
     assert(Materialize.reapAll(spark) === 0,
       "the persisted frame leaked past a runtime mode flip")
   }

@@ -209,9 +209,7 @@ class PlanAuditSpec extends SparkSpec {
   test("partitioned keyspace layout: point GET prunes to one shard directory") {
     val dir = Files.createTempDirectory("graft_kv_layout").toString
     try {
-      // coalesce(1): one file per shard directory, so file counts in the
-      // scan metrics directly reflect partition pruning
-      PartitionedLayout.write(KvLog.state(spark, sf).coalesce(1), dir)
+      PartitionedLayout.write(KvLog.state(spark, sf), dir)
       // the reader declares the layout schema, so planning the GET reads
       // no footer: no job until the action, and the action is one job
       val (q, planJobs) = jobsOf {
@@ -242,7 +240,7 @@ class PlanAuditSpec extends SparkSpec {
   test("keyset page: one shard directory, pushed cursor, TakeOrdered") {
     val dir = Files.createTempDirectory("graft_kv_page").toString
     try {
-      PartitionedLayout.write(KvLog.state(spark, sf).coalesce(1), dir)
+      PartitionedLayout.write(KvLog.state(spark, sf), dir)
       val q = PartitionedLayout.listPage(spark, dir, 0, "order:5", 50)
       val p = q.queryExecution.executedPlan.toString
       // shard filter prunes at planning; cursor predicate reaches the
@@ -268,8 +266,7 @@ class PlanAuditSpec extends SparkSpec {
     try {
       // 4 ranges: (-inf,3), [3,5), [5,7), [7,inf) over 'order:<n>' keys
       val bounds = Seq("order:3", "order:5", "order:7")
-      PartitionedLayout.writeRanged(
-        KvLog.state(spark, sf).coalesce(1), dir, bounds)
+      PartitionedLayout.writeRanged(KvLog.state(spark, sf), dir, bounds)
       val q = PartitionedLayout.rangeScan(spark, dir,
         "order:3", "order:5", bounds)
       val p = q.queryExecution.executedPlan.toString

@@ -21,7 +21,7 @@ class ShardCountSpec extends SparkSpec {
       val state = KvLog.compact(KvLog.log(spark, sf))
         .select(col("key"), col("value"),
           Fnv1a32.shardId(col("key"), n).as("shard_id"))
-      PartitionedLayout.write(state.coalesce(1), dir)
+      PartitionedLayout.write(state, dir)
 
       // all 16 shards populated, roughly uniformly
       val counts = spark.read.parquet(dir).groupBy("shard_id").count()

@@ -35,7 +35,7 @@ class KvStorageSpec extends SparkSpec {
       assert(got === expected)
 
       // lay out for point reads, then GET through the pruned path
-      PartitionedLayout.write(state.coalesce(1), s"$base/layout")
+      PartitionedLayout.write(state, s"$base/layout")
       val hit = PartitionedLayout.pointGet(spark, s"$base/layout", "order:42")
         .collect()
       assert(hit.length === 1)
