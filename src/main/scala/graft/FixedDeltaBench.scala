@@ -67,9 +67,8 @@ object FixedDeltaBench {
     // retrain-per-call incremental twin re-tokenizes the corpus BY
     // DESIGN and is reported alongside for contrast
     val isNewFd = col("doc_id") > lit(maxDoc - DeltaDocs)
-    val lshPath = graft.dedup.LshIndex.indexPath(spark, dir) + s"_fd$DeltaDocs"
-    if (!new java.io.File(s"$lshPath/shingles/_SUCCESS").exists())
-      graft.dedup.LshIndex.buildWith(spark, dir, lshPath, isNewFd)
+    val lshPath = graft.dedup.LshIndex.buildIfMissingAt(
+      spark, dir, isNewFd, s"_fd$DeltaDocs")
     val (lshRows, lshSec) = time {
       graft.dedup.LshIndex.probeWith(spark, dir, isNewFd, lshPath).count()
     }

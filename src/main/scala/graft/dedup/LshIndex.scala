@@ -41,32 +41,25 @@ object LshIndex {
     * incremental query fixes: every 10th doc plays the new batch). */
   private def isNew = col("doc_id") % 10 === 0
 
-  def build(s: SparkSession, dir: String, path: String): Unit =
-    buildWith(s, dir, path, isNew)
-
-  /** Build with a caller-chosen new/standing split — the fixed-delta
-    * measurement ([[graft.FixedDeltaBench]]) passes "the last D ids". */
-  private[graft] def buildWith(s: SparkSession, dir: String, path: String,
-      isNewCol: org.apache.spark.sql.Column): Unit = {
-    val shIdx = shingled(s, dir).filter(!isNewCol).localCheckpoint()
-    val postings = bandSignatures(shIdx)
-      .groupBy("band", "sig")
-      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-      .filter(size(col("ids")) <= MaxPosting)
-    postings.repartition(col("band")).sortWithinPartitions("sig")
-      .write.mode("overwrite").partitionBy("band").parquet(s"$path/postings")
-    shIdx.select("doc_id", "shingles")
-      .write.mode("overwrite").parquet(s"$path/shingles")
-  }
-
-  private val lock = new Object
-
   def buildIfMissing(s: SparkSession, dir: String): String =
-    lock.synchronized {
-      val path = indexPath(s, dir)
-      if (!new java.io.File(s"$path/postings/_SUCCESS").exists())
-        build(s, dir, path)
-      path
+    buildIfMissingAt(s, dir, isNew, "")
+
+  /** Build with a caller-chosen new/standing split under `tag` — the
+    * fixed-delta measurement ([[graft.FixedDeltaBench]]) passes "the
+    * last D ids" so its index cannot collide with the convention one.
+    * Both tables land before the generation's marker. */
+  private[graft] def buildIfMissingAt(s: SparkSession, dir: String,
+      isNewCol: org.apache.spark.sql.Column, tag: String): String =
+    graft.sources.IndexCache.generation(indexPath(s, dir) + tag) { path =>
+      val shIdx = shingled(s, dir).filter(!isNewCol).localCheckpoint()
+      val postings = bandSignatures(shIdx)
+        .groupBy("band", "sig")
+        .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
+        .filter(size(col("ids")) <= MaxPosting)
+      postings.repartition(col("band")).sortWithinPartitions("sig")
+        .write.mode("overwrite").partitionBy("band").parquet(s"$path/postings")
+      shIdx.select("doc_id", "shingles")
+        .write.mode("overwrite").parquet(s"$path/shingles")
     }
 
   /** Probe the new batch against the PERSISTED index: candidates from

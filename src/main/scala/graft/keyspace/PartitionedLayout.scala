@@ -51,19 +51,20 @@ object PartitionedLayout {
     * move. */
   val PageRows = 1000
 
-  /** The one sorted writer behind [[write]], [[writeRanged]] and
-    * [[compactFiles]]: one write task per `part` value (`repartition` on
-    * it, so each task owns its whole directory), rows sorted by key,
-    * pages of at most [[PageRows]] rows and files of at most
-    * `maxRecordsPerFile` rows (0: no limit). The sort is on (`part`,
-    * key), not key alone: the file writer needs its input sorted by the
-    * partition column, and a key-only sort gets a `part` sort planned
-    * on top of it that throws the key order away. Every kept relation of
-    * `path` is dropped before and after the rewrite. */
+  /** The one sorted writer behind [[write]], [[writeRanged]],
+    * [[compactFiles]] and [[writeZOrdered]]: one write task per `part`
+    * value (`repartition` on it, so each task owns its whole directory),
+    * rows sorted by `sortCol`, pages of at most [[PageRows]] rows and
+    * files of at most `maxRecordsPerFile` rows (0: no limit). The sort is
+    * on (`part`, `sortCol`), not `sortCol` alone: the file writer needs
+    * its input sorted by the partition column, and a `sortCol`-only sort
+    * gets a `part` sort planned on top of it that throws the `sortCol`
+    * order away. Every kept relation of `path` is dropped before and
+    * after the rewrite. */
   private def sortedWrite(df: DataFrame, part: String, path: String,
-      maxRecordsPerFile: Long = 0): Unit = {
+      sortCol: String = "key", maxRecordsPerFile: Long = 0): Unit = {
     forget(path)
-    df.repartition(col(part)).sortWithinPartitions(part, "key")
+    df.repartition(col(part)).sortWithinPartitions(part, sortCol)
       .write.mode("overwrite")
       .option("parquet.page.row.count.limit", PageRows.toLong)
       .option("maxRecordsPerFile", maxRecordsPerFile)
@@ -212,7 +213,7 @@ object PartitionedLayout {
   def compactFiles(spark: SparkSession, path: String, outPath: String,
       targetRowsPerFile: Long): Unit =
     sortedWrite(spark.read.schema(Schema).parquet(path), "shard_id", outPath,
-      targetRowsPerFile)
+      maxRecordsPerFile = targetRowsPerFile)
 
   /** Morton/Z-value of two bounded non-negative integer dimensions: the
     * low `bits` bits of `x` and `y` interleaved (x on even positions).
@@ -248,7 +249,8 @@ object PartitionedLayout {
     * (time × tenant, day × user-cohort) at 100 TB. `cellShift` trades
     * directory count against cell granularity; an EVEN shift keeps every
     * cell a square, so the directory filter is a rectangle union. Rows
-    * are Z-sorted inside each cell to keep row-group stats tight. */
+    * are Z-sorted inside each cell file, in [[PageRows]]-row pages, to
+    * keep page and row-group stats tight. */
   def writeZOrdered(df: DataFrame, path: String, x: Column, y: Column,
       bits: Int = 8, cellShift: Int = 10): Unit = {
     requireZParams(bits, cellShift)
@@ -266,10 +268,7 @@ object PartitionedLayout {
         s"z-order domain overflow: x in [${mx.getLong(2)}, ${mx.getLong(0)}], " +
           s"y in [${mx.getLong(3)}, ${mx.getLong(1)}] must fit [0, $bound)")
     }
-    staged
-      .repartition(col("z_cell"))
-      .sortWithinPartitions("zv")
-      .write.mode("overwrite").partitionBy("z_cell").parquet(path)
+    sortedWrite(staged, "z_cell", path, sortCol = "zv")
   }
 
   /** The (x, y) rectangle a Z-cell covers (even `cellShift` ⇒ square).

@@ -32,10 +32,22 @@ object PassageIndex {
   def indexPath(s: SparkSession, dir: String): String =
     graft.sources.IndexCache.path(s, dir, "passage", "documents", "doc_id")
 
-  /** One positional tokenize, five persisted tables. */
-  def build(s: SparkSession, dir: String, path: String): Unit = {
-    val ct = chunkTf(s, dir) // checkpointed (doc_id, chunk, term, tf)
-    assertBm25Headroom(s, dir, ct, tag = "chunk",
+  /** The five tables of one generation, as a serve reads them. */
+  private case class Tables(postings: DataFrame, forward: DataFrame,
+      cdstats: DataFrame, vstats: DataFrame, cstats: DataFrame)
+
+  private def readTables(s: SparkSession, path: String): Tables = {
+    def t(name: String) = s.read.parquet(s"$path/$name")
+    Tables(t("postings"), t("forward"), t("cdstats"), t("vstats"), t("cstats"))
+  }
+
+  /** The one table writer of every generation: `ct` is the checkpointed
+    * (doc_id, chunk, term, tf) table over the documents `docs` the
+    * generation covers. The headroom guard runs first under `tag`, with
+    * the generation's own chunk count. */
+  private def writeTables(s: SparkSession, dir: String, path: String,
+      docs: DataFrame, ct: DataFrame, tag: String): Unit = {
+    assertBm25Headroom(s, dir, ct, tag,
       nCollection = Some(() =>
         ct.select("doc_id", "chunk").distinct().count()))
     val tDoc = ct.groupBy("doc_id", "term").agg(sum("tf").as("tf"))
@@ -47,96 +59,48 @@ object PassageIndex {
       .sortWithinPartitions("doc_id", "term")
       .write.mode("overwrite").parquet(s"$path/forward")
     ct.groupBy("doc_id", "chunk").agg(sum("tf").as("dl"))
-      .repartitionByRange(col("doc_id")).sortWithinPartitions("doc_id", "chunk")
       .write.mode("overwrite").parquet(s"$path/cdstats")
     tDoc.groupBy("term").agg(count(lit(1)).as("df_doc"))
       .join(ct.groupBy("term").agg(count(lit(1)).as("df_chunk")), "term")
-      .repartitionByRange(col("term")).sortWithinPartitions("term")
       .write.mode("overwrite").parquet(s"$path/vstats")
-    s.read.parquet(s"$dir/documents.parquet")
-      .agg(count(lit(1)).as("n_docs"))
+    docs.agg(count(lit(1)).as("n_docs"))
       .crossJoin(ct.agg(
         countDistinct(col("doc_id"), col("chunk")).as("n_chunks")))
       .crossJoin(ct.agg(sum("tf").as("tl")))
       .write.mode("overwrite").parquet(s"$path/cstats")
   }
 
-  private val lock = new Object
-
+  /** The full-corpus generation: one positional tokenize, five tables. */
   def buildIfMissing(s: SparkSession, dir: String): String =
-    lock.synchronized {
-      val path = indexPath(s, dir)
-      if (!new java.io.File(s"$path/cstats/_SUCCESS").exists())
-        build(s, dir, path)
-      path
+    graft.sources.IndexCache.generation(indexPath(s, dir)) { path =>
+      val docs = s.read.parquet(s"$dir/documents.parquet")
+      writeTables(s, dir, path, docs, chunkTfOf(docs), "chunk")
     }
 
   /** Passage top-k with MaxP from the persisted index — zero tokenize
     * stages at query time; bit-identical to
     * [[RetrievalQueries.passageTopk]]. */
-  def serve(s: SparkSession, dir: String, k: Int = TopK): DataFrame = {
-    val path = buildIfMissing(s, dir)
-    serveFrom(s,
-      s.read.parquet(s"$path/postings"),
-      s.read.parquet(s"$path/forward"),
-      s.read.parquet(s"$path/cdstats"),
-      s.read.parquet(s"$path/vstats"),
-      s.read.parquet(s"$path/cstats"), k)
-  }
+  def serve(s: SparkSession, dir: String, k: Int = TopK): DataFrame =
+    serveFrom(s, readTables(s, buildIfMissing(s, dir)), k)
 
   // -- incremental maintenance: exact delta append (SparseIndex's
   // -- lifecycle at chunk granularity; BM25 has no trained state, so
   // -- every merge below is exact and all served paths share the
   // -- passage oracle) ------------------------------------------------
 
-  /** Build the BASE index over documents up to [[SparseIndex.baseCutoff]]
-    * only — the same newest-10%-arrive-later convention as every other
-    * incremental story here. */
-  def buildBase(s: SparkSession, dir: String, path: String): Unit =
-    buildBaseAt(s, dir, path, SparseIndex.baseCutoff(s, dir), "")
-
-  /** Cutoff-parametrized base build — `tag` keeps fixed-delta
-    * measurement indexes ([[graft.FixedDeltaBench]]) from colliding
-    * with the convention-cutoff index (and its headroom memo key). */
-  private[graft] def buildBaseAt(s: SparkSession, dir: String,
-      path: String, cut: Long, tag: String): Unit = {
-    val baseDocs = s.read.parquet(s"$dir/documents.parquet")
-      .filter(col("doc_id") <= cut)
-    val ct = chunkTfOf(baseDocs)
-    // guard the standalone base generation like build() (ADVICE r8)
-    assertBm25Headroom(s, dir, ct, tag = s"chunk_base$tag",
-      nCollection = Some(() =>
-        ct.select("doc_id", "chunk").distinct().count()))
-    val tDoc = ct.groupBy("doc_id", "term").agg(sum("tf").as("tf"))
-      .localCheckpoint()
-    ct.repartitionByRange(col("term"))
-      .sortWithinPartitions("term", "doc_id", "chunk")
-      .write.mode("overwrite").parquet(s"$path/postings")
-    tDoc.repartitionByRange(col("doc_id"))
-      .sortWithinPartitions("doc_id", "term")
-      .write.mode("overwrite").parquet(s"$path/forward")
-    ct.groupBy("doc_id", "chunk").agg(sum("tf").as("dl"))
-      .write.mode("overwrite").parquet(s"$path/cdstats")
-    tDoc.groupBy("term").agg(count(lit(1)).as("df_doc"))
-      .join(ct.groupBy("term").agg(count(lit(1)).as("df_chunk")), "term")
-      .write.mode("overwrite").parquet(s"$path/vstats")
-    baseDocs.agg(count(lit(1)).as("n_docs"))
-      .crossJoin(ct.agg(
-        countDistinct(col("doc_id"), col("chunk")).as("n_chunks")))
-      .crossJoin(ct.agg(sum("tf").as("tl")))
-      .write.mode("overwrite").parquet(s"$path/cstats")
-  }
-
-  def buildBaseIfMissing(s: SparkSession, dir: String): String =
-    buildBaseIfMissingAt(s, dir, SparseIndex.baseCutoff(s, dir), "")
-
+  /** The BASE generation over documents up to `cut` only — the newest
+    * documents past [[SparseIndex.baseCutoff]] arrive later, the same
+    * convention as every other incremental story here. `tag` keeps
+    * fixed-delta measurement indexes ([[graft.FixedDeltaBench]]) from
+    * colliding with the convention-cutoff index (and its headroom memo
+    * key); the standalone base is guarded like the full build
+    * (ADVICE r8). */
   private[graft] def buildBaseIfMissingAt(s: SparkSession, dir: String,
       cut: Long, tag: String): String =
-    lock.synchronized {
-      val path = indexPath(s, dir) + s"_base$tag"
-      if (!new java.io.File(s"$path/cstats/_SUCCESS").exists())
-        buildBaseAt(s, dir, path, cut, tag)
-      path
+    graft.sources.IndexCache.generation(indexPath(s, dir) + s"_base$tag") { path =>
+      val docs = s.read.parquet(s"$dir/documents.parquet")
+        .filter(col("doc_id") <= cut)
+      writeTables(s, dir, path, docs, chunkTfOf(docs), s"chunk_base$tag")
     }
 
   /** The delta tail's tables, tokenized at serve time (the ingest-batch
@@ -152,105 +116,71 @@ object PassageIndex {
     * production arrival-rate shape) instead of 10% of the corpus. */
   private[graft] def serveWithDeltaAt(s: SparkSession, dir: String,
       cut: Long, tag: String, k: Int = TopK): DataFrame = {
-    val path = buildBaseIfMissingAt(s, dir, cut, tag)
+    val base = readTables(s, buildBaseIfMissingAt(s, dir, cut, tag))
     val deltaDocs = s.read.parquet(s"$dir/documents.parquet")
       .filter(col("doc_id") > cut)
     val dt = chunkTfOf(deltaDocs)
     val dtDoc = dt.groupBy("doc_id", "term").agg(sum("tf").as("tf"))
       .localCheckpoint()
-    val postings = s.read.parquet(s"$path/postings").unionByName(dt)
+    val postings = base.postings.unionByName(dt)
     // merged postings = the full corpus's chunk tf rows — same bound and
-    // memo key as build(), so the incremental path is guarded too
+    // memo key as the full build, so the incremental path is guarded too
     // (ADVICE r8)
     assertBm25Headroom(s, dir, postings, tag = s"chunk$tag",
       nCollection = Some(() =>
         postings.select("doc_id", "chunk").distinct().count()))
-    val forward = s.read.parquet(s"$path/forward").unionByName(dtDoc)
-    val cdstats = s.read.parquet(s"$path/cdstats")
-      .unionByName(dt.groupBy("doc_id", "chunk").agg(sum("tf").as("dl")))
-    val vstats = s.read.parquet(s"$path/vstats")
-      .unionByName(
-        dtDoc.groupBy("term").agg(count(lit(1)).as("df_doc"))
-          .join(dt.groupBy("term").agg(count(lit(1)).as("df_chunk")),
-            "term"))
-      .groupBy("term").agg(sum("df_doc").as("df_doc"),
-        sum("df_chunk").as("df_chunk"))
     val cDelta = deltaDocs.agg(count(lit(1)).as("n_docs_d"))
       .crossJoin(dt.agg(coalesce(
         countDistinct(col("doc_id"), col("chunk")), lit(0L))
         .as("n_chunks_d")))
       .crossJoin(dt.agg(coalesce(sum("tf"), lit(0L)).as("tl_d")))
-    val cstats = s.read.parquet(s"$path/cstats").crossJoin(cDelta)
-      .select((col("n_docs") + col("n_docs_d")).as("n_docs"),
-        (col("n_chunks") + col("n_chunks_d")).as("n_chunks"),
-        (col("tl") + col("tl_d")).as("tl"))
-    serveFrom(s, postings, forward, cdstats, vstats, cstats, k)
+    serveFrom(s, Tables(
+      postings,
+      base.forward.unionByName(dtDoc),
+      base.cdstats
+        .unionByName(dt.groupBy("doc_id", "chunk").agg(sum("tf").as("dl"))),
+      base.vstats
+        .unionByName(
+          dtDoc.groupBy("term").agg(count(lit(1)).as("df_doc"))
+            .join(dt.groupBy("term").agg(count(lit(1)).as("df_chunk")),
+              "term"))
+        .groupBy("term").agg(sum("df_doc").as("df_doc"),
+          sum("df_chunk").as("df_chunk")),
+      base.cstats.crossJoin(cDelta)
+        .select((col("n_docs") + col("n_docs_d")).as("n_docs"),
+          (col("n_chunks") + col("n_chunks_d")).as("n_chunks"),
+          (col("tl") + col("tl_d")).as("tl"))), k)
   }
 
-  /** Fold the delta into a compacted GENERATION — gated by a marker
-    * created only after all five tables landed, and idempotent because
-    * base rows are re-selected by the id range (the IvfPq/SparseIndex
-    * compaction discipline). The merge is exact, so the compacted
-    * generation serves bit-identically to a full rebuild. */
-  def compactDelta(s: SparkSession, dir: String): String = lock.synchronized {
-    val base = buildBaseIfMissing(s, dir)
-    val path = base + "_compacted"
-    val marker = new java.io.File(s"$path/_ALL_TABLES")
-    if (!marker.exists()) {
+  /** Fold the delta into a compacted GENERATION beside the base —
+    * idempotent because base rows are re-selected by the id range, and
+    * checked against its own marker before the cutoff or the base is
+    * resolved (the [[SparseIndex.compactDelta]] discipline). The merge
+    * is exact, so the compacted generation serves bit-identically to a
+    * full rebuild. */
+  def compactDelta(s: SparkSession, dir: String): String =
+    graft.sources.IndexCache.generation(indexPath(s, dir) + "_base_compacted") { path =>
       val cut = SparseIndex.baseCutoff(s, dir)
-      val dt = chunkTfOf(s.read.parquet(s"$dir/documents.parquet")
-        .filter(col("doc_id") > cut))
+      val base = buildBaseIfMissingAt(s, dir, cut, "")
+      val docs = s.read.parquet(s"$dir/documents.parquet")
       val merged = s.read.parquet(s"$base/postings")
         .filter(col("doc_id") <= cut) // idempotent: base rows by range
-        .unionByName(dt)
+        .unionByName(chunkTfOf(docs.filter(col("doc_id") > cut)))
         .localCheckpoint()
       // full-corpus chunk stats after the merge (ADVICE r8)
-      assertBm25Headroom(s, dir, merged, tag = "chunk",
-        nCollection = Some(() =>
-          merged.select("doc_id", "chunk").distinct().count()))
-      val mDoc = merged.groupBy("doc_id", "term").agg(sum("tf").as("tf"))
-        .localCheckpoint()
-      merged.repartitionByRange(col("term"))
-        .sortWithinPartitions("term", "doc_id", "chunk")
-        .write.mode("overwrite").parquet(s"$path/postings")
-      mDoc.repartitionByRange(col("doc_id"))
-        .sortWithinPartitions("doc_id", "term")
-        .write.mode("overwrite").parquet(s"$path/forward")
-      merged.groupBy("doc_id", "chunk").agg(sum("tf").as("dl"))
-        .write.mode("overwrite").parquet(s"$path/cdstats")
-      mDoc.groupBy("term").agg(count(lit(1)).as("df_doc"))
-        .join(merged.groupBy("term").agg(count(lit(1)).as("df_chunk")),
-          "term")
-        .write.mode("overwrite").parquet(s"$path/vstats")
-      s.read.parquet(s"$dir/documents.parquet")
-        .agg(count(lit(1)).as("n_docs"))
-        .crossJoin(merged.agg(
-          countDistinct(col("doc_id"), col("chunk")).as("n_chunks")))
-        .crossJoin(merged.agg(sum("tf").as("tl")))
-        .write.mode("overwrite").parquet(s"$path/cstats")
-      require(marker.createNewFile(), s"cannot stamp $marker")
+      writeTables(s, dir, path, docs, merged, "chunk")
     }
-    path
-  }
 
   /** Serve AFTER compaction: persisted pruned scans only, no serve-time
     * tokenize; bit-identical to [[serve]]/[[serveWithDelta]]. */
   def serveCompacted(s: SparkSession, dir: String, k: Int = TopK)
-      : DataFrame = {
-    val path = compactDelta(s, dir)
-    serveFrom(s,
-      s.read.parquet(s"$path/postings"),
-      s.read.parquet(s"$path/forward"),
-      s.read.parquet(s"$path/cdstats"),
-      s.read.parquet(s"$path/vstats"),
-      s.read.parquet(s"$path/cstats"), k)
-  }
+      : DataFrame =
+    serveFrom(s, readTables(s, compactDelta(s, dir)), k)
 
   /** The shared serving tail over whatever table set the caller
     * assembled (persisted, base+delta union, or compacted). */
-  private def serveFrom(s: SparkSession, postings: DataFrame,
-      forward: DataFrame, cdstats: DataFrame, vstats: DataFrame,
-      cstats: DataFrame, k: Int): DataFrame = {
+  private def serveFrom(s: SparkSession, t: Tables, k: Int): DataFrame = {
+    import t._
     val c = cstats.localCheckpoint() // 1 row
     // keywords: forward point-lookup × doc-level df — same rational
     // tf·N/df scoring and (score, term) tie-break as the exact path

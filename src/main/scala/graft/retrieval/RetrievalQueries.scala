@@ -183,10 +183,15 @@ object RetrievalQueries extends graft.QueryModule {
   private[retrieval] val tfBuilds = new java.util.concurrent.atomic.AtomicInteger
   private[retrieval] val denseBuilds = new java.util.concurrent.atomic.AtomicInteger
 
-  /** (doc_id, term, tf) in one scan — whitespace tokens, empties out
-    * (same tokenization as the text family). Checkpointed: df, dl,
-    * keywords, and scoring all reuse it. */
-  private def tf(s: SparkSession, dir: String): DataFrame = {
+  /** (doc_id, term, tf) over the whole corpus. */
+  private def tf(s: SparkSession, dir: String): DataFrame = tfOf(docs(s, dir))
+
+  /** (doc_id, term, tf) over a document subset in one scan — whitespace
+    * tokens, empties out (same tokenization as the text family).
+    * Checkpointed: df, dl, keywords, and scoring all reuse it. The one
+    * doc-level tokenize: the per-query BM25 family and every
+    * [[SparseIndex]] generation (full, base, delta, compacted) run it. */
+  private[retrieval] def tfOf(d: DataFrame): DataFrame = {
     tfBuilds.incrementAndGet()
     // Measured both ways at sf0.1 (full warm bench, this round): forcing
     // full parallelism here (spread the scan + pin the checkpoint on
@@ -196,8 +201,7 @@ object RetrievalQueries extends graft.QueryModule {
     // is the right local answer. Left as-is deliberately; at cluster
     // scale the same chain gets its parallelism from the natural input
     // splits, not from this plan.
-    docs(s, dir)
-      .select(col("doc_id"), explode(split(col("text"), "\\s+")).as("term"))
+    d.select(col("doc_id"), explode(split(col("text"), "\\s+")).as("term"))
       .filter(col("term") =!= "")
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
       .localCheckpoint()
@@ -246,11 +250,6 @@ object RetrievalQueries extends graft.QueryModule {
       .select("query_doc", "term")
   }
 
-  /** The BM25 scoring tail over an ARBITRARY (query_doc, term) keyword
-    * table — split out so [[prfExpand]] can rescore with an expanded
-    * term set. Candidate generation IS the broadcast semi-join: posting
-    * rows that carry a query term; then one exact integer chain per
-    * (query, candidate, term) onto the 2^-14 grid. */
   /** The pre-window scoring stage: every candidate's (n_terms,
     * score_fp) — split from the rank so [[filteredSparse]] can apply
     * its facet restriction BEFORE the top-k window (pre-filter
@@ -272,6 +271,11 @@ object RetrievalQueries extends graft.QueryModule {
       .agg(count(lit(1)).as("n_terms"), sum("c").as("score_fp"))
   }
 
+  /** The BM25 scoring tail over an ARBITRARY (query_doc, term) keyword
+    * table — split out so [[prfExpand]] can rescore with an expanded
+    * term set. Candidate generation IS the broadcast semi-join: posting
+    * rows that carry a query term; then one exact integer chain per
+    * (query, candidate, term) onto the 2^-14 grid. */
   private def bm25Rank(s: SparkSession, dir: String, t: DataFrame,
       keywords: DataFrame): DataFrame = {
     val w = Window.partitionBy("query_doc")
@@ -678,7 +682,7 @@ object RetrievalQueries extends graft.QueryModule {
     * the delta-ingest entry point for [[PassageIndex]]. */
   private[retrieval] def chunkTfOf(d: DataFrame): DataFrame = {
     tfBuilds.incrementAndGet()
-    // same decision as [[tf]]: measured, forced parallelism regressed —
+    // same decision as [[tfOf]]: measured, forced parallelism regressed —
     // see the comment there.
     d.select(col("doc_id"),
         posexplode(split(col("text"), "\\s+")).as(Seq("p", "term")))
@@ -1219,10 +1223,6 @@ object RetrievalQueries extends graft.QueryModule {
        |ORDER BY query_doc, mmr_rank""".stripMargin
   }
 
-  /** `ret_passage_topk`'s oracle — also `ret_passage_served`'s:
-    * the persisted chunk index is a deterministic reshaping of the same
-    * positional tokenize, so the served lists are bit-identical by
-    * construction. */
   /** The passage CTE chain (positional tokenize → chunk postings →
     * chunk BM25 → MaxP `ptopk`), shared by the passage oracles and the
     * granularity-agreement eval. Depends on `kw` from [[listsCte]]. */
@@ -1278,6 +1278,10 @@ object RetrievalQueries extends graft.QueryModule {
          |  ) WHERE rank <= $TopK
          |)""".stripMargin
 
+  /** `ret_passage_topk`'s oracle — also `ret_passage_served`'s:
+    * the persisted chunk index is a deterministic reshaping of the same
+    * positional tokenize, so the served lists are bit-identical by
+    * construction. */
   private lazy val passageSql =
     s"""WITH $listsCte,
        |$passageCtes

@@ -42,82 +42,24 @@ object SparseIndex {
   def indexPath(s: SparkSession, dir: String): String =
     graft.sources.IndexCache.path(s, dir, "bm25", "documents", "doc_id")
 
-  /** One tokenize pass over `docs`, shaped like the per-query `tf`. */
-  private def tokenize(docs: DataFrame): DataFrame =
-    docs
-      .select(col("doc_id"), explode(split(col("text"), "\\s+")).as("term"))
-      .filter(col("term") =!= "")
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
+  /** The five tables of one generation, as a serve reads them. */
+  private case class Tables(postings: DataFrame, forward: DataFrame,
+      dstats: DataFrame, vstats: DataFrame, cstats: DataFrame)
 
-  /** Tokenize once, persist the five index tables. The postings table is
-    * range-partitioned on term and sorted within partitions so serving's
-    * `term IN (...)` filter skips files and row groups; the forward
-    * table likewise on doc_id. */
-  def build(s: SparkSession, dir: String, path: String): Unit = {
-    val docs = s.read.parquet(s"$dir/documents.parquet")
-    val t = tokenize(docs).localCheckpoint()
-    RetrievalQueries.assertBm25Headroom(s, dir, t)
-    t.repartitionByRange(col("term")).sortWithinPartitions("term", "doc_id")
-      .write.mode("overwrite").parquet(s"$path/postings")
-    t.repartitionByRange(col("doc_id")).sortWithinPartitions("doc_id", "term")
-      .write.mode("overwrite").parquet(s"$path/forward")
-    t.groupBy("doc_id").agg(sum("tf").as("dl"))
-      .repartitionByRange(col("doc_id")).sortWithinPartitions("doc_id")
-      .write.mode("overwrite").parquet(s"$path/dstats")
-    t.groupBy("term").agg(count(lit(1)).as("df"))
-      .repartitionByRange(col("term")).sortWithinPartitions("term")
-      .write.mode("overwrite").parquet(s"$path/vstats")
-    docs.agg(count(lit(1)).as("n"))
-      .crossJoin(t.agg(sum("tf").as("tl")))
-      .write.mode("overwrite").parquet(s"$path/cstats")
+  private def readTables(s: SparkSession, path: String): Tables = {
+    def t(name: String) = s.read.parquet(s"$path/$name")
+    Tables(t("postings"), t("forward"), t("dstats"), t("vstats"), t("cstats"))
   }
 
-  private val lock = new Object
-
-  def buildIfMissing(s: SparkSession, dir: String): String =
-    lock.synchronized {
-      val path = indexPath(s, dir)
-      if (!new java.io.File(s"$path/cstats/_SUCCESS").exists())
-        build(s, dir, path)
-      path
-    }
-
-  /** BM25 top-k from the persisted index — zero tokenize stages at query
-    * time; bit-identical to [[RetrievalQueries.sparseTopk]]. */
-  def serve(s: SparkSession, dir: String, k: Int = TopK): DataFrame = {
-    val path = buildIfMissing(s, dir)
-    serveFrom(s, path,
-      s.read.parquet(s"$path/postings"),
-      s.read.parquet(s"$path/forward"),
-      s.read.parquet(s"$path/dstats"),
-      s.read.parquet(s"$path/vstats"),
-      s.read.parquet(s"$path/cstats"), k)
-  }
-
-  // -- incremental maintenance: exact delta append -------------------------
-
-  /** Base/delta split point — same convention as the IVF-PQ and LSH
-    * incremental stories: the newest ~10% of documents play the role of
-    * post-build arrivals. */
-  def baseCutoff(s: SparkSession, dir: String): Long =
-    s.read.parquet(s"$dir/documents.parquet")
-      .agg(max("doc_id")).head().getLong(0) * 9 / 10
-
-  /** Build the BASE index over documents up to the cutoff only. */
-  def buildBase(s: SparkSession, dir: String, path: String): Unit =
-    buildBaseAt(s, dir, path, baseCutoff(s, dir), "")
-
-  /** Cutoff-parametrized base build — `tag` keeps fixed-delta
-    * measurement indexes ([[graft.FixedDeltaBench]]) from colliding
-    * with the convention-cutoff index (and its headroom memo key). */
-  private[graft] def buildBaseAt(s: SparkSession, dir: String,
-      path: String, cut: Long, tag: String): Unit = {
-    val docs = s.read.parquet(s"$dir/documents.parquet")
-      .filter(col("doc_id") <= cut)
-    val t = tokenize(docs).localCheckpoint()
-    // the base generation serves standalone until the delta arrives —
-    // guard it like build() does (ADVICE r8), with the BASE doc count
-    RetrievalQueries.assertBm25Headroom(s, dir, t, tag = s"doc_base$tag",
+  /** The one table writer of every generation: `t` is the (doc_id, term,
+    * tf) table over the documents `docs` the generation covers. The
+    * postings table is range-partitioned on term and sorted within
+    * partitions so serving's `term IN (...)` filter skips files and row
+    * groups; the forward table likewise on doc_id. The headroom guard
+    * runs first under `tag`, with the generation's own doc count. */
+  private def writeTables(s: SparkSession, dir: String, path: String,
+      docs: DataFrame, t: DataFrame, tag: String): Unit = {
+    RetrievalQueries.assertBm25Headroom(s, dir, t, tag,
       nCollection = Some(() => docs.count()))
     t.repartitionByRange(col("term")).sortWithinPartitions("term", "doc_id")
       .write.mode("overwrite").parquet(s"$path/postings")
@@ -132,16 +74,38 @@ object SparseIndex {
       .write.mode("overwrite").parquet(s"$path/cstats")
   }
 
-  def buildBaseIfMissing(s: SparkSession, dir: String): String =
-    buildBaseIfMissingAt(s, dir, baseCutoff(s, dir), "")
+  /** The full-corpus generation: tokenize once, persist the five tables. */
+  def buildIfMissing(s: SparkSession, dir: String): String =
+    graft.sources.IndexCache.generation(indexPath(s, dir)) { path =>
+      val docs = s.read.parquet(s"$dir/documents.parquet")
+      writeTables(s, dir, path, docs, tfOf(docs), "doc")
+    }
 
+  /** BM25 top-k from the persisted index — zero tokenize stages at query
+    * time; bit-identical to [[RetrievalQueries.sparseTopk]]. */
+  def serve(s: SparkSession, dir: String, k: Int = TopK): DataFrame =
+    serveFrom(s, readTables(s, buildIfMissing(s, dir)), k)
+
+  // -- incremental maintenance: exact delta append -------------------------
+
+  /** Base/delta split point — same convention as the IVF-PQ and LSH
+    * incremental stories: the newest ~10% of documents play the role of
+    * post-build arrivals. */
+  def baseCutoff(s: SparkSession, dir: String): Long =
+    s.read.parquet(s"$dir/documents.parquet")
+      .agg(max("doc_id")).head().getLong(0) * 9 / 10
+
+  /** The BASE generation over documents up to `cut` only — `tag` keeps
+    * fixed-delta measurement indexes ([[graft.FixedDeltaBench]]) from
+    * colliding with the convention-cutoff index (and its headroom memo
+    * key). The base serves standalone until the delta arrives, so it is
+    * guarded like the full build (ADVICE r8), with the BASE doc count. */
   private[graft] def buildBaseIfMissingAt(s: SparkSession, dir: String,
       cut: Long, tag: String): String =
-    lock.synchronized {
-      val path = indexPath(s, dir) + s"_base$tag"
-      if (!new java.io.File(s"$path/cstats/_SUCCESS").exists())
-        buildBaseAt(s, dir, path, cut, tag)
-      path
+    graft.sources.IndexCache.generation(indexPath(s, dir) + s"_base$tag") { path =>
+      val docs = s.read.parquet(s"$dir/documents.parquet")
+        .filter(col("doc_id") <= cut)
+      writeTables(s, dir, path, docs, tfOf(docs), s"doc_base$tag")
     }
 
   /** Serve over base + delta: the delta tail (doc_id > cutoff) is
@@ -157,94 +121,60 @@ object SparseIndex {
     * production arrival-rate shape) instead of 10% of the corpus. */
   private[graft] def serveWithDeltaAt(s: SparkSession, dir: String,
       cut: Long, tag: String, k: Int = TopK): DataFrame = {
-    val path = buildBaseIfMissingAt(s, dir, cut, tag)
+    val base = readTables(s, buildBaseIfMissingAt(s, dir, cut, tag))
     val deltaDocs = s.read.parquet(s"$dir/documents.parquet")
       .filter(col("doc_id") > cut)
-    val dt = tokenize(deltaDocs).localCheckpoint()
-    val postings = s.read.parquet(s"$path/postings").unionByName(dt)
+    val dt = tfOf(deltaDocs)
+    val postings = base.postings.unionByName(dt)
     // merged postings = the full corpus's tf rows: check the same bound
-    // build() checks, under the same memo key, so the incremental path
-    // cannot silently wrap where the full build would refuse (ADVICE r8)
+    // the full build checks, under the same memo key, so the incremental
+    // path cannot silently wrap where the full build would refuse
+    // (ADVICE r8)
     RetrievalQueries.assertBm25Headroom(s, dir, postings, tag = s"doc$tag")
-    val forward = s.read.parquet(s"$path/forward").unionByName(dt)
-    val dstats = s.read.parquet(s"$path/dstats")
-      .unionByName(dt.groupBy("doc_id").agg(sum("tf").as("dl")))
-    // df merges by SUM over the union (a term present in both legs adds)
-    val vstats = s.read.parquet(s"$path/vstats")
-      .unionByName(dt.groupBy("term").agg(count(lit(1)).as("df")))
-      .groupBy("term").agg(sum("df").as("df"))
-    val cBase = s.read.parquet(s"$path/cstats")
     val cDelta = deltaDocs.agg(count(lit(1)).as("n_d"))
       .crossJoin(dt.agg(coalesce(sum("tf"), lit(0L)).as("tl_d")))
-    val cstats = cBase.crossJoin(cDelta)
-      .select((col("n") + col("n_d")).as("n"), (col("tl") + col("tl_d")).as("tl"))
-    serveFrom(s, path, postings, forward, dstats, vstats, cstats, k)
+    serveFrom(s, Tables(
+      postings,
+      base.forward.unionByName(dt),
+      base.dstats.unionByName(dt.groupBy("doc_id").agg(sum("tf").as("dl"))),
+      // df merges by SUM over the union (a term present in both legs adds)
+      base.vstats
+        .unionByName(dt.groupBy("term").agg(count(lit(1)).as("df")))
+        .groupBy("term").agg(sum("df").as("df")),
+      base.cstats.crossJoin(cDelta)
+        .select((col("n") + col("n_d")).as("n"),
+          (col("tl") + col("tl_d")).as("tl"))), k)
   }
 
-  /** Fold the delta tail into a new index GENERATION — the periodic
-    * compaction that returns serving to pruned persisted scans only.
-    * The base tables are NOT re-tokenized (that is the point of
-    * compaction): base postings merge with the freshly-encoded delta by
-    * union, stats by exact aggregation. The generation is written to a
-    * sibling directory and gated by a final marker created only after
-    * ALL five tables landed, so a crash mid-compaction leaves the next
-    * call re-running from scratch instead of serving a partial index;
-    * the merge is idempotent because base rows are selected by the id
-    * range (same discipline as [[graft.sim.IvfPqIndex.compactDelta]]).
-    * Because the merge is exact, the compacted generation is
-    * bit-identical to a full rebuild — `ret_bm25_compacted` shares
-    * `ret_bm25_topk`'s oracle like the other two served paths. */
-  def compactDelta(s: SparkSession, dir: String): String = lock.synchronized {
-    val base = buildBaseIfMissing(s, dir)
-    val path = base + "_compacted"
-    val marker = new java.io.File(s"$path/_ALL_TABLES")
-    if (!marker.exists()) {
+  /** Fold the delta tail into a new index GENERATION beside the base —
+    * the periodic compaction that returns serving to pruned persisted
+    * scans only. The base tables are NOT re-tokenized (that is the
+    * point of compaction): base postings merge with the freshly-encoded
+    * delta by union, stats by exact aggregation. The merge is
+    * idempotent because base rows are selected by the id range, and the
+    * marker check comes first, so a compacted serve resolves neither
+    * the cutoff nor the base. Because the merge is exact, the compacted
+    * generation is bit-identical to a full rebuild — `ret_bm25_compacted`
+    * shares `ret_bm25_topk`'s oracle like the other two served paths. */
+  def compactDelta(s: SparkSession, dir: String): String =
+    graft.sources.IndexCache.generation(indexPath(s, dir) + "_base_compacted") { path =>
       val cut = baseCutoff(s, dir)
-      val dt = tokenize(s.read.parquet(s"$dir/documents.parquet")
-        .filter(col("doc_id") > cut)).localCheckpoint()
+      val base = buildBaseIfMissingAt(s, dir, cut, "")
+      val docs = s.read.parquet(s"$dir/documents.parquet")
       val merged = s.read.parquet(s"$base/postings")
         .filter(col("doc_id") <= cut) // idempotent: base rows by range
-        .unionByName(dt)
+        .unionByName(tfOf(docs.filter(col("doc_id") > cut)))
         .localCheckpoint()
-      // full-corpus stats again after the merge (ADVICE r8) — shares
-      // build()'s memo key, so at most one aggregate per corpus
-      RetrievalQueries.assertBm25Headroom(s, dir, merged)
-      merged.repartitionByRange(col("term"))
-        .sortWithinPartitions("term", "doc_id")
-        .write.mode("overwrite").parquet(s"$path/postings")
-      merged.repartitionByRange(col("doc_id"))
-        .sortWithinPartitions("doc_id", "term")
-        .write.mode("overwrite").parquet(s"$path/forward")
-      merged.groupBy("doc_id").agg(sum("tf").as("dl"))
-        .write.mode("overwrite").parquet(s"$path/dstats")
-      merged.groupBy("term").agg(count(lit(1)).as("df"))
-        .write.mode("overwrite").parquet(s"$path/vstats")
-      s.read.parquet(s"$dir/documents.parquet").agg(count(lit(1)).as("n"))
-        .crossJoin(merged.agg(sum("tf").as("tl")))
-        .write.mode("overwrite").parquet(s"$path/cstats")
-      require(marker.createNewFile(), s"cannot stamp $marker")
+      // full-corpus stats again after the merge (ADVICE r8) — shares the
+      // full build's memo key, so at most one aggregate per corpus
+      writeTables(s, dir, path, docs, merged, "doc")
     }
-    path
-  }
 
   /** Serve AFTER compaction: persisted pruned scans only, no serve-time
     * tokenize of the delta; bit-identical to [[serve]]/[[serveWithDelta]]. */
-  def serveCompacted(s: SparkSession, dir: String, k: Int = TopK): DataFrame = {
-    val path = compactDelta(s, dir)
-    serveFrom(s, path,
-      s.read.parquet(s"$path/postings"),
-      s.read.parquet(s"$path/forward"),
-      s.read.parquet(s"$path/dstats"),
-      s.read.parquet(s"$path/vstats"),
-      s.read.parquet(s"$path/cstats"), k)
-  }
+  def serveCompacted(s: SparkSession, dir: String, k: Int = TopK): DataFrame =
+    serveFrom(s, readTables(s, compactDelta(s, dir)), k)
 
-  /** The shared serving tail. `forward` supplies the query docs' term
-    * rows (point lookup), `vstats` the df for keyword scoring, then the
-    * keyword terms COLLECT into literal predicates for the postings
-    * scan (row-group/file pruning — the control-plane fetch is ≤
-    * |queries| · [[RetrievalQueries.NumKeywords]] rows). Scoring is the
-    * identical reduced integer chain of `sparseTopk`. */
   /** The keyword stage alone: each query doc's [[RetrievalQueries.NumKeywords]]
     * strongest TF-IDF terms, derived from the given forward/vocab/corpus
     * tables (same scoring and tie-break as the exact path). */
@@ -273,9 +203,15 @@ object SparseIndex {
       s.read.parquet(s"$path/cstats").localCheckpoint())
   }
 
-  private def serveFrom(s: SparkSession, path: String, postings: DataFrame,
-      forward: DataFrame, dstats: DataFrame, vstats: DataFrame,
-      cstats: DataFrame, k: Int): DataFrame = {
+  /** The shared serving tail over one generation's tables (persisted,
+    * or base ∪ delta). `forward` supplies the query docs' term
+    * rows (point lookup), `vstats` the df for keyword scoring, then the
+    * keyword terms COLLECT into literal predicates for the postings
+    * scan (row-group/file pruning — the control-plane fetch is ≤
+    * |queries| · [[RetrievalQueries.NumKeywords]] rows). Scoring is the
+    * identical reduced integer chain of `sparseTopk`. */
+  private def serveFrom(s: SparkSession, t: Tables, k: Int): DataFrame = {
+    import t._
     val c = cstats.localCheckpoint() // 1 row: n, tl
     val keywords = keywordsFrom(forward, vstats, c)
     // literal term predicates -> parquet row-group pruning on postings

@@ -45,36 +45,35 @@ object IvfPqIndex {
   def indexPath(s: SparkSession, dir: String): String =
     graft.sources.IndexCache.path(s, dir, "ivfpq", "embeddings", "vec_id")
 
-  /** Train (coarse cells + PQ codebooks) and persist the three index
-    * tables. One corpus read per Lloyd iteration — the same training
-    * dataflow as the per-query path, run ONCE. */
-  def build(s: SparkSession, dir: String, path: String): Unit = {
-    val e = s.read.parquet(s"$dir/embeddings.parquet")
-    val centroids = coarseCentroids(e)
-    val assigned = assignedCells(e).select("vec_id", "cell")
+  /** The codes table of a generation, partitioned by the coarse cell. */
+  private def writeCodes(codes: DataFrame, path: String): Unit =
+    codes.select("vec_id", "sub", "cluster", "cell")
+      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/codes")
+
+  private def readCodes(s: SparkSession, path: String): DataFrame =
+    s.read.parquet(s"$path/codes").select("vec_id", "sub", "cluster", "cell")
+
+  /** Train (coarse cells + PQ codebooks) on `e` and persist the three
+    * index tables. One corpus read per Lloyd iteration — the same
+    * training dataflow as the per-query path, run ONCE. */
+  private def train(path: String, e: DataFrame): Unit = {
     // loop-invariant input to every pqCodebooks Lloyd round → the
     // mode-selectable materialization, like the loop's own rounds
     val sv = pqSubVecs(e.select("vec_id", "embedding"))
       .transform(graft.Materialize(_))
     val cb = pqCodebooks(sv)
-    val codes = pqAssign(sv, cb).select("vec_id", "sub", "cluster")
-      .join(assigned, "vec_id")
-    centroids.write.mode("overwrite").parquet(s"$path/centroids")
+    coarseCentroids(e).write.mode("overwrite").parquet(s"$path/centroids")
     cb.write.mode("overwrite").parquet(s"$path/codebooks")
-    codes.write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$path/codes")
+    writeCodes(pqAssign(sv, cb).select("vec_id", "sub", "cluster")
+      .join(assignedCells(e).select("vec_id", "cell"), "vec_id"), path)
   }
 
-  private val lock = new Object
-
-  /** Build exactly once per corpus per process; later calls (and later
-    * processes — the layout lives under target/) reuse the files. */
-  def buildIfMissing(s: SparkSession, dir: String): String = lock.synchronized {
-    val path = indexPath(s, dir)
-    val done = new java.io.File(s"$path/codes/_SUCCESS")
-    if (!done.exists()) build(s, dir, path)
-    path
-  }
+  /** The full-corpus generation, built once per corpus; later calls (and
+    * later processes — the layout lives under target/) reuse the files. */
+  def buildIfMissing(s: SparkSession, dir: String): String =
+    graft.sources.IndexCache.generation(indexPath(s, dir)) { path =>
+      train(path, s.read.parquet(s"$dir/embeddings.parquet"))
+    }
 
   // -- incremental maintenance: frozen-quantizer delta append -------------
 
@@ -85,50 +84,16 @@ object IvfPqIndex {
     s.read.parquet(s"$dir/embeddings.parquet")
       .agg(max("vec_id")).head().getLong(0) * 9 / 10
 
-  /** Nearest-cell assignment against a GIVEN centroid table (the
-    * persisted one) — same scoring and tie-break as
-    * [[SimilarityQueries.assignedCells]], which derives its centroids
-    * inline. */
-  private def assignCellsWith(e: DataFrame, centroids: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("vec_id").orderBy(col("cos_c").desc, col("cell"))
-    e.crossJoin(broadcast(centroids))
-      .select(col("vec_id"), col("embedding"), col("cell"),
-        cosine(col("embedding"), col("c_emb")).as("cos_c"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") === 1)
-      .select(col("vec_id"), col("cell"))
-  }
+  private def basePath(s: SparkSession, dir: String): String =
+    indexPath(s, dir) + "_base"
 
-  /** Build the BASE index: quantizers trained on vectors up to the
+  /** The BASE generation: quantizers trained on vectors up to the
     * cutoff only, codes stored for those vectors only — the state an
     * index is in when new data starts arriving. */
-  def buildBase(s: SparkSession, dir: String, path: String): Unit = {
-    // a fresh base is by definition un-compacted: the generation marker
-    // lives INSIDE codes/, which the overwrite below wipes (the legacy
-    // top-level marker is deleted defensively for old on-disk layouts)
-    new java.io.File(s"$path/COMPACTED").delete()
-    val cut = baseCutoff(s, dir)
-    val base = s.read.parquet(s"$dir/embeddings.parquet")
-      .filter(col("vec_id") <= cut)
-    val centroids = coarseCentroids(base)
-    val sv = pqSubVecs(base.select("vec_id", "embedding"))
-      .transform(graft.Materialize(_))
-    val cb = pqCodebooks(sv)
-    val codes = pqAssign(sv, cb).select("vec_id", "sub", "cluster")
-      .join(assignCellsWith(base, centroids), "vec_id")
-    centroids.write.mode("overwrite").parquet(s"$path/centroids")
-    cb.write.mode("overwrite").parquet(s"$path/codebooks")
-    codes.write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$path/codes")
-  }
-
   def buildBaseIfMissing(s: SparkSession, dir: String): String =
-    lock.synchronized {
-      val path = indexPath(s, dir) + "_base"
-      val done = new java.io.File(s"$path/codes/_SUCCESS")
-      if (!done.exists()) buildBase(s, dir, path)
-      path
+    graft.sources.IndexCache.generation(basePath(s, dir)) { path =>
+      train(path, s.read.parquet(s"$dir/embeddings.parquet")
+        .filter(col("vec_id") <= baseCutoff(s, dir)))
     }
 
   /** Encode post-cutoff arrivals with the index's FROZEN quantizers —
@@ -143,7 +108,7 @@ object IvfPqIndex {
     val codebooks = s.read.parquet(s"$path/codebooks")
     pqAssign(pqSubVecs(delta.select("vec_id", "embedding")), codebooks)
       .select("vec_id", "sub", "cluster")
-      .join(assignCellsWith(delta, centroids), "vec_id")
+      .join(assignedCells(delta, centroids).select("vec_id", "cell"), "vec_id")
   }
 
   /** Serve over base + un-compacted delta: the persisted codes still
@@ -152,80 +117,40 @@ object IvfPqIndex {
     * index rebuilds. Top-k can and does surface delta vectors. */
   def serveWithDelta(s: SparkSession, dir: String, k: Int = 5): DataFrame = {
     val path = buildBaseIfMissing(s, dir)
-    val codes = s.read.parquet(s"$path/codes")
-      .select("vec_id", "sub", "cluster", "cell")
-      .unionByName(deltaCodes(s, dir, path))
-    serveFrom(s, dir, path, codes, k)
+    serveFrom(s, dir, path,
+      readCodes(s, path).unionByName(deltaCodes(s, dir, path)), k)
   }
 
-  /** Marker file recording that a codes generation already contains the
-    * folded delta. It lives INSIDE the generation directory ("_" prefix
-    * so Spark's parquet reader ignores it, like _SUCCESS) and is created
-    * BEFORE the swap, so the rename moves data and marker atomically
-    * together — there is no crash window in which a compacted table can
-    * be mistaken for an un-compacted one (ADVICE r7). */
-  val GenMarker = "_COMPACTED_GEN"
-
-  /** Fold the delta tail into the partitioned codes table — the
-    * periodic compaction that returns serving to a single pruned scan.
-    * Quantizers stay frozen; only `codes/` is rewritten (next
-    * generation written beside it, then swapped — never overwrite a
-    * table a reader may be scanning).
-    *
-    * Crash-safe twice over: the [[GenMarker]] travels inside the
-    * generation (see above), AND the merge itself is idempotent — base
-    * rows are selected by `vec_id <= cutoff` rather than trusting the
-    * live table to be delta-free, so even a codes table that somehow
-    * already holds delta rows merges to the exact same result. */
-  def compactDelta(s: SparkSession, dir: String): String = lock.synchronized {
-    val path = buildBaseIfMissing(s, dir)
-    if (!new java.io.File(s"$path/codes/$GenMarker").exists()) {
-      val cut = baseCutoff(s, dir)
-      val merged = s.read.parquet(s"$path/codes")
-        .select("vec_id", "sub", "cluster", "cell")
-        .filter(col("vec_id") <= cut) // idempotent: base rows by range
-        .unionByName(deltaCodes(s, dir, path))
-      val next = s"$path/codes_next"
-      merged.write.mode("overwrite").partitionBy("cell").parquet(next)
-      require(new java.io.File(s"$next/$GenMarker").createNewFile(),
-        s"cannot stamp generation marker under $next")
-      def del(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(del)
-        f.delete()
-      }
-      // Swap by renaming the LIVE generation aside first, so there is
-      // never a window with no codes table: codes -> codes_old,
-      // codes_next -> codes, then drop codes_old. A crash between the
-      // two renames leaves codes_old + codes_next, both complete; the
-      // _SUCCESS check in buildBaseIfMissing triggers a clean rebuild.
-      val live = new java.io.File(s"$path/codes")
-      val old = new java.io.File(s"$path/codes_old")
-      del(old) // leftover from a previous crash, if any
-      require(live.renameTo(old), s"rename-aside failed under $path")
-      require(new java.io.File(next).renameTo(live),
-        s"generation swap failed under $path")
-      del(old)
+  /** Fold the delta tail into a `codes/` table of its own — the periodic
+    * compaction that returns serving to a single pruned scan. Quantizers
+    * stay frozen, so the compacted generation holds only `codes/` and is
+    * served with the base's quantizers; it is a sibling directory
+    * (`<base>_compacted`), so the base's codes never change and
+    * [[serveWithDelta]] keeps unioning the delta onto delta-free codes.
+    * The merge is idempotent — base rows are selected by
+    * `vec_id <= cutoff` — so a re-run after a lost marker writes the
+    * same table. */
+  def compactDelta(s: SparkSession, dir: String): String =
+    graft.sources.IndexCache.generation(basePath(s, dir) + "_compacted") { path =>
+      val base = buildBaseIfMissing(s, dir)
+      writeCodes(readCodes(s, base)
+        .filter(col("vec_id") <= baseCutoff(s, dir)) // base rows by range
+        .unionByName(deltaCodes(s, dir, base)), path)
     }
-    path
-  }
 
   /** Serve AFTER compaction: one pruned scan again, results identical
-    * to [[serveWithDelta]] (same quantizers, same code set). */
-  def serveCompacted(s: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val path = compactDelta(s, dir)
-    serveFrom(s, dir, path,
-      s.read.parquet(s"$path/codes").select("vec_id", "sub", "cluster", "cell"),
-      k)
-  }
+    * to [[serveWithDelta]] (same quantizers, same code set). The
+    * compacted generation's marker is checked first; its quantizers are
+    * the base's, which its compaction required to be complete. */
+  def serveCompacted(s: SparkSession, dir: String, k: Int = 5): DataFrame =
+    serveFrom(s, dir, basePath(s, dir), readCodes(s, compactDelta(s, dir)), k)
 
   /** Serve top-k ADC neighbors for the stored query vector FROM THE
     * PERSISTED INDEX — zero training stages, zero corpus-embedding
     * scans; bit-identical to `sim_ivfpq_ann`. */
   def serve(s: SparkSession, dir: String, k: Int = 5): DataFrame = {
     val path = buildIfMissing(s, dir)
-    serveFrom(s, dir, path,
-      s.read.parquet(s"$path/codes").select("vec_id", "sub", "cluster", "cell"),
-      k)
+    serveFrom(s, dir, path, readCodes(s, path), k)
   }
 
   /** Serve per-query ADC top-k for a SET of stored queries from the
@@ -274,8 +199,7 @@ object IvfPqIndex {
       max(when(col("sub") === j, col("d"))).as(s"d_$j"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("query_doc").orderBy(col("adc_dist"), col("vec_id"))
-    s.read.parquet(s"$path/codes")
-      .select("vec_id", "sub", "cluster", "cell")
+    readCodes(s, path)
       .filter(col("cell").isin(cellsUnion: _*))
       .join(broadcast(pairs), "cell")
       .filter(col("vec_id") =!= col("query_doc"))
@@ -291,9 +215,9 @@ object IvfPqIndex {
       .orderBy("query_doc", "rank")
   }
 
-  /** The shared serving tail: probe cells against the persisted
-    * centroids, broadcast the query LUT from the persisted codebooks,
-    * ADC top-k over `codes` (the persisted table, or base ∪ delta). */
+  /** The shared serving tail: probe cells against the centroids
+    * persisted under `path`, broadcast the query LUT from its codebooks,
+    * ADC top-k over `codes` (a persisted table, or base ∪ delta). */
   private def serveFrom(s: SparkSession, dir: String, path: String,
       codes: DataFrame, k: Int): DataFrame = {
     val centroids = s.read.parquet(s"$path/centroids")

@@ -53,8 +53,9 @@ object KnnGraphIndex extends graft.QueryModule {
   def indexPath(s: SparkSession, dir: String): String =
     graft.sources.IndexCache.path(s, dir, "knng", "embeddings", "vec_id")
 
-  /** Derive all four tables from a members view and persist them.
-    * Write order puts `degrees/` last — its _SUCCESS is the build gate. */
+  /** Derive all four tables from a members view and persist them — the
+    * one table writer of every generation (full, planes-scaled, base,
+    * compacted). */
   private def writeTables(m: DataFrame, path: String): Unit = {
     m.repartitionByRange(col("bucket"))
       .sortWithinPartitions("bucket", "vec_id")
@@ -72,18 +73,12 @@ object KnnGraphIndex extends graft.QueryModule {
       .write.mode("overwrite").parquet(s"$path/degrees")
   }
 
-  def build(s: SparkSession, dir: String, path: String): Unit =
-    writeTables(pairMembers(s, dir).localCheckpoint(), path)
-
-  private val lock = new Object
+  /** Persist the generation at `path` over the members `m`. */
+  private def generation(path: String)(m: => DataFrame): String =
+    graft.sources.IndexCache.generation(path)(writeTables(m.localCheckpoint(), _))
 
   def buildIfMissing(s: SparkSession, dir: String): String =
-    lock.synchronized {
-      val path = indexPath(s, dir)
-      if (!new java.io.File(s"$path/degrees/_SUCCESS").exists())
-        build(s, dir, path)
-      path
-    }
+    generation(indexPath(s, dir))(pairMembers(s, dir))
 
   /** `sim_knn_join` from the persisted edge table alone — zero pair
     * stages at query time; bit-identical to the exact query. */
@@ -112,13 +107,8 @@ object KnnGraphIndex extends graft.QueryModule {
     * At gate SF the schedule floors at 8 planes and this index equals
     * the fixed one bit-for-bit. */
   def buildScaledIfMissing(s: SparkSession, dir: String): String =
-    lock.synchronized {
-      val path = indexPath(s, dir) + "_scaled"
-      if (!new java.io.File(s"$path/degrees/_SUCCESS").exists())
-        writeTables(SimilarityQueries.pairMembersScaled(s, dir)
-          .localCheckpoint(), path)
-      path
-    }
+    generation(indexPath(s, dir) + "_scaled")(
+      SimilarityQueries.pairMembersScaled(s, dir))
 
   /** `ret_graph_ppr` served from the planes-scaled index generation. */
   def servePprScaled(s: SparkSession, dir: String): DataFrame = {
@@ -143,21 +133,13 @@ object KnnGraphIndex extends graft.QueryModule {
     s.read.parquet(s"$dir/embeddings.parquet")
       .agg(max("vec_id")).head().getLong(0) * 9 / 10
 
-  def buildBaseIfMissing(s: SparkSession, dir: String): String =
-    buildBaseIfMissingAt(s, dir, baseCutoff(s, dir), "")
-
-  /** Cutoff-parametrized base build — `tag` keeps fixed-delta
-    * measurement indexes ([[graft.FixedDeltaBench]]) from colliding with
-    * the convention-cutoff index in the cache. */
+  /** The BASE generation over vectors up to `cut` — `tag` keeps
+    * fixed-delta measurement indexes ([[graft.FixedDeltaBench]]) from
+    * colliding with the convention-cutoff index in the cache. */
   private[graft] def buildBaseIfMissingAt(s: SparkSession, dir: String,
       cut: Long, tag: String): String =
-    lock.synchronized {
-      val path = indexPath(s, dir) + s"_base$tag"
-      if (!new java.io.File(s"$path/degrees/_SUCCESS").exists())
-        writeTables(pairMembers(s, dir).filter(col("vec_id") <= cut)
-          .localCheckpoint(), path)
-      path
-    }
+    generation(indexPath(s, dir) + s"_base$tag")(
+      pairMembers(s, dir).filter(col("vec_id") <= cut))
 
   /** The full corpus's pair set served over base + delta: untouched
     * buckets stream from the base pair table (pruned NOT-IN predicate),
@@ -187,29 +169,21 @@ object KnnGraphIndex extends graft.QueryModule {
     untouched.unionByName(recomputed)
   }
 
-  /** Fold the delta into a new index GENERATION — sibling directory,
-    * final `_ALL_TABLES` marker created only after all four tables
-    * landed (a crash mid-compaction re-runs from scratch instead of
-    * serving a partial index), base rows selected by the id range so the
-    * merge is idempotent — the [[graft.retrieval.SparseIndex.compactDelta]]
-    * discipline. Members merge by range-selected union; pairs/edges/
-    * degrees re-derive from the merged members, so the generation equals
-    * a full rebuild bit-for-bit. */
-  def compactDelta(s: SparkSession, dir: String): String = lock.synchronized {
-    val base = buildBaseIfMissing(s, dir)
-    val path = base + "_compacted"
-    val marker = new java.io.File(s"$path/_ALL_TABLES")
-    if (!marker.exists()) {
+  /** Fold the delta into a new index GENERATION beside the base — its
+    * marker checked before the cutoff or the base is resolved, base rows
+    * selected by the id range so the merge is idempotent — the
+    * [[graft.retrieval.SparseIndex.compactDelta]] discipline. Members
+    * merge by range-selected union; pairs/edges/degrees re-derive from
+    * the merged members, so the generation equals a full rebuild
+    * bit-for-bit. */
+  def compactDelta(s: SparkSession, dir: String): String =
+    generation(indexPath(s, dir) + "_base_compacted") {
       val cut = baseCutoff(s, dir)
-      val merged = s.read.parquet(s"$base/members")
+      val base = buildBaseIfMissingAt(s, dir, cut, "")
+      s.read.parquet(s"$base/members")
         .filter(col("vec_id") <= cut) // idempotent: base rows by range
         .unionByName(pairMembers(s, dir).filter(col("vec_id") > cut))
-        .localCheckpoint()
-      writeTables(merged, path)
-      require(marker.createNewFile(), s"cannot stamp $marker")
     }
-    path
-  }
 
   /** `sim_knn_join` served AFTER compaction: persisted pruned scans
     * only, no serve-time pair recompute; bit-identical to [[serveKnnJoin]]. */

@@ -198,19 +198,32 @@ object SimilarityQueries extends graft.QueryModule {
       .select(col("vec_id").as("cell"), col("embedding").as("c_emb"))
 
   /** Nearest coarse centroid per vector — ONE definition shared by the
-    * IVF serving path, the recall measurement, and the semantic-dedup
-    * prune, so the assignment (and its tie-break) can never drift
-    * between the path being measured and the measurement. */
-  private[sim] def assignedCells(e: DataFrame): DataFrame = {
+    * IVF serving path, the persisted IVF-PQ index, the recall
+    * measurement, and the semantic-dedup prune, so the assignment (and
+    * its tie-break) can never drift between the path being measured and
+    * the measurement. The centroids are `e`'s own fixed-seed cells, or a
+    * given (cell, c_emb) table — the persisted one, when a delta is
+    * encoded against a frozen index. */
+  private[sim] def assignedCells(e: DataFrame): DataFrame =
+    assignedCells(e, coarseCentroids(e))
+
+  private[sim] def assignedCells(e: DataFrame, centroids: DataFrame)
+      : DataFrame = {
     val w = Window.partitionBy("vec_id")
       .orderBy(col("cos_c").desc, col("cell"))
-    e.crossJoin(broadcast(coarseCentroids(e)))
+    e.crossJoin(broadcast(centroids))
       .select(col("vec_id"), col("embedding"), col("cell"),
         cosine(col("embedding"), col("c_emb")).as("cos_c"))
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") === 1)
       .select(col("vec_id"), col("embedding"), col("cell"))
   }
+
+  /** Squared L2 distance as three deterministic dot-product folds — THE
+    * one distance expression every argmin and LUT in this file builds
+    * from, so the float op sequence can never drift between them. */
+  private[sim] def sqDist(v: Column, c: Column): Column =
+    dot(v, v) - lit(2.0) * dot(v, c) + dot(c, c)
 
   /** Nearest centroid per vector: squared-L2 via three deterministic
     * dot-product folds, ties broken by cluster id. The 8-row centroid side
@@ -220,12 +233,6 @@ object SimilarityQueries extends graft.QueryModule {
     * reaches the shuffle (a row_number window would shuffle AND sort all
     * N×K rows). The (dist, cluster) ordering key is unique per vector, so
     * the min is deterministic and equals the oracle's row_number pick. */
-  /** Squared L2 distance as three deterministic dot-product folds — THE
-    * one distance expression every argmin and LUT in this file builds
-    * from, so the float op sequence can never drift between them. */
-  private[sim] def sqDist(v: Column, c: Column): Column =
-    dot(v, v) - lit(2.0) * dot(v, c) + dot(c, c)
-
   private def kmeansAssign(vecs: DataFrame, cents: DataFrame): DataFrame =
     vecs.crossJoin(broadcast(cents))
       .select(col("vec_id"), col("cluster"),
@@ -289,13 +296,6 @@ object SimilarityQueries extends graft.QueryModule {
       .agg(transform(array_sort(collect_list(struct(col("i"), col("val")))),
         x => x.getField("val")).as("c"))
 
-  /** Scored bucket-local pairs (vec_id, label, nbr, nbr_label, cos_sim),
-    * both directions — ONE pair stage shared by the kNN join and the
-    * hard-negative miner so their candidate sets cannot drift. Pairs come
-    * from per-bucket posting lists under the standard MaxPosting cap
-    * (never a self-join: the bucket derivation runs once, from one
-    * checkpoint), then each side's embedding and precomputed norm joins
-    * back by id. */
   /** The k-core peeling loop behind sim_knn_kcore; returns the core
     * (vec_id, core_degree) and the round at which the edge set
     * stabilized (for the convergence-pinning spec). */
@@ -397,6 +397,13 @@ object SimilarityQueries extends graft.QueryModule {
           .as("cos_sim"))
   }
 
+  /** Scored bucket-local pairs (vec_id, label, nbr, nbr_label, cos_sim),
+    * both directions — ONE pair stage shared by the kNN join and the
+    * hard-negative miner so their candidate sets cannot drift. Pairs come
+    * from per-bucket posting lists under the standard MaxPosting cap
+    * (never a self-join: the bucket derivation runs once, from one
+    * checkpoint), then each side's embedding and precomputed norm joins
+    * back by id. */
   private[graft] def bucketCosinePairs(s: SparkSession, dir: String): DataFrame =
     pairsFrom(pairMembers(s, dir).localCheckpoint()).drop("bucket")
 

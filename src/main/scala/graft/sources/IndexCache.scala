@@ -5,11 +5,33 @@ import java.io.File
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Cache-key discipline for the persisted build/serve artifacts
-  * (IVF-PQ index, LSH dedup index, BPE tokenizer) under
-  * `target/graft_index`.
+/** The lifecycle of every persisted index generation under
+  * `target/graft_index`: its cache key ([[path]]) and its completion gate
+  * ([[generation]]). Six families persist through it — the BM25 index
+  * ([[graft.retrieval.SparseIndex]]), the passage index
+  * ([[graft.retrieval.PassageIndex]]), the kNN graph
+  * ([[graft.sim.KnnGraphIndex]]), the IVF-PQ index
+  * ([[graft.sim.IvfPqIndex]]), the MinHash-LSH dedup index
+  * ([[graft.dedup.LshIndex]]) and the BPE tokenizer
+  * ([[graft.text.BpeVocab]]) — each with its full, base (and
+  * fixed-delta base) and compacted generations.
   *
-  * Three failure modes of a path-only key, all closed here:
+  * THE GATE. A generation is a directory of tables plus one
+  * [[Marker]] file at its root, stamped only after every table landed.
+  * [[generation]] writes the tables when the marker is missing and
+  * never otherwise, under a lock per generation path (two families, or
+  * two generations of one family, build concurrently). So:
+  *
+  *   - a build killed part-way leaves no marker and the next call
+  *     rebuilds the whole generation, never serving a partial one;
+  *   - deleting the marker forces a rebuild; tables are written in
+  *     overwrite mode, and a compaction selects its base rows by id
+  *     range, so a rebuild after a lost marker does not duplicate rows;
+  *   - a compacted generation is a sibling directory
+  *     (`<base>_compacted`) written beside its base, never into it, so a
+  *     base stays what its marker says it is.
+  *
+  * THE KEY. Three failure modes of a path-only key, all closed here:
   *
   *   1. STALENESS — the index is a deterministic function of the corpus,
   *      but a fixture regenerated in place keeps its path, so a key made
@@ -38,6 +60,26 @@ object IndexCache {
 
   private val cache = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private val pruneLock = new Object
+
+  /** The completion marker at the root of every generation. */
+  val Marker = "_ALL_TABLES"
+
+  private val locks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
+  /** The one gate of every persisted generation: under `path`'s lock,
+    * run `write(path)` and then stamp `path/`[[Marker]] unless the
+    * marker is already there; return `path`. `write` writes every table
+    * of the generation (in overwrite mode) and may open other
+    * generations it reads from, such as a compaction's base. */
+  def generation(path: String)(write: String => Unit): String =
+    locks.computeIfAbsent(path, _ => new Object).synchronized {
+      val marker = new File(path, Marker)
+      if (!marker.exists()) {
+        write(path)
+        require(marker.createNewFile(), s"cannot stamp $marker")
+      }
+      path
+    }
 
   private def fnv32(s: String): Long = {
     var h = 2166136261L

@@ -32,45 +32,36 @@ object BpeVocab {
   private def bracketed(c: org.apache.spark.sql.Column) =
     concat_ws("", transform(split(c, ""), ch => concat(lit("<"), ch, lit(">"))))
 
-  /** Run the training loop (identical math to `text_bpe_train`) and
-    * persist the ordered merge list: (iter, pair, repl). */
-  def build(s: SparkSession, dir: String, path: String): Unit = {
-    val vocab = s.read.parquet(s"$dir/documents.parquet")
-      .select(explode(split(col("text"), " ")).as("w"))
-      .groupBy("w").agg(count("*").as("freq"))
-      .select(bracketed(col("w")).as("r"), col("freq"))
-    val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String)]
-    graft.Materialize.iterate(vocab, BpeTrainIters) { v =>
-      val pair = v
-        .select(col("freq"),
-          expr("split(substring(r, 2, length(r) - 2), '><')").as("syms"))
-        .select(col("freq"), explode(when(size(col("syms")) >= 2,
-            expr("transform(sequence(0, size(syms) - 2), i -> concat(" +
-              "'<', element_at(syms, CAST(i + 1 AS INT)), '><', " +
-              "element_at(syms, CAST(i + 2 AS INT)), '>'))"))
-            .otherwise(array().cast("array<string>"))).as("pair"))
-        .groupBy("pair").agg(sum("freq").as("n"))
-        .orderBy(col("n").desc, col("pair")).limit(1)
-        .head().getString(0)
-      val repl = pair.replace("><", "")
-      rows += ((rows.size + 1L, pair, repl))
-      v.select(
-        call_function("replace", col("r"), lit(pair), lit(repl)).as("r"),
-        col("freq"))
-    }((_, _) => false)
-    import s.implicits._
-    rows.toSeq.toDF("iter", "pair", "repl").coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/merges")
-  }
-
-  private val lock = new Object
-
+  /** Run the training loop (identical math to `text_bpe_train`) once
+    * per corpus and persist the ordered merge list: (iter, pair, repl). */
   def buildIfMissing(s: SparkSession, dir: String): String =
-    lock.synchronized {
-      val path = indexPath(s, dir)
-      if (!new java.io.File(s"$path/merges/_SUCCESS").exists())
-        build(s, dir, path)
-      path
+    graft.sources.IndexCache.generation(indexPath(s, dir)) { path =>
+      val vocab = s.read.parquet(s"$dir/documents.parquet")
+        .select(explode(split(col("text"), " ")).as("w"))
+        .groupBy("w").agg(count("*").as("freq"))
+        .select(bracketed(col("w")).as("r"), col("freq"))
+      val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String)]
+      graft.Materialize.iterate(vocab, BpeTrainIters) { v =>
+        val pair = v
+          .select(col("freq"),
+            expr("split(substring(r, 2, length(r) - 2), '><')").as("syms"))
+          .select(col("freq"), explode(when(size(col("syms")) >= 2,
+              expr("transform(sequence(0, size(syms) - 2), i -> concat(" +
+                "'<', element_at(syms, CAST(i + 1 AS INT)), '><', " +
+                "element_at(syms, CAST(i + 2 AS INT)), '>'))"))
+              .otherwise(array().cast("array<string>"))).as("pair"))
+          .groupBy("pair").agg(sum("freq").as("n"))
+          .orderBy(col("n").desc, col("pair")).limit(1)
+          .head().getString(0)
+        val repl = pair.replace("><", "")
+        rows += ((rows.size + 1L, pair, repl))
+        v.select(
+          call_function("replace", col("r"), lit(pair), lit(repl)).as("r"),
+          col("freq"))
+      }((_, _) => false)
+      import s.implicits._
+      rows.toSeq.toDF("iter", "pair", "repl").coalesce(1)
+        .write.mode("overwrite").parquet(s"$path/merges")
     }
 
   /** The ordered merge list from the persisted tokenizer. */

@@ -57,6 +57,26 @@ class LshIndexSpec extends SparkSpec {
       rs.exists(_.contains("/shingles")), rs.mkString("\n"))
   }
 
+  test("a build killed after postings/ and before shingles/ is rebuilt " +
+      "by the next probe, which returns the same rows") {
+    def rows = LshIndex.probe(spark, sf).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    val path = LshIndex.buildIfMissing(spark, sf)
+    val before = rows
+    // the state such a kill leaves: postings/ complete, shingles/
+    // missing, and no completion marker at the generation's root
+    def del(f: File): Unit = {
+      if (f.isDirectory) f.listFiles().foreach(del)
+      f.delete()
+    }
+    del(new File(s"$path/shingles"))
+    new File(path, graft.sources.IndexCache.Marker).delete()
+    assert(new File(s"$path/postings/_SUCCESS").exists())
+    assert(rows == before)
+    assert(new File(s"$path/shingles/_SUCCESS").exists(),
+      "the probe must rebuild the missing table")
+  }
+
   test("the index builds once and is reused") {
     val path = LshIndex.buildIfMissing(spark, sf)
     val marker = new File(s"$path/postings/_SUCCESS")

@@ -346,8 +346,8 @@ class RetrievalQueriesSpec extends SparkSpec {
     // crash window: the marker is lost after the tables landed — the
     // next serve must re-run the (idempotent, base-range-selected)
     // merge and produce the same lists
-    val marker = new java.io.File(
-      PassageIndex.buildBaseIfMissing(spark, sf) + "_compacted/_ALL_TABLES")
+    val marker = new java.io.File(PassageIndex.compactDelta(spark, sf),
+      graft.sources.IndexCache.Marker)
     assert(marker.delete(), "marker should exist after compaction")
     val again = queries("ret_passage_compacted")(spark, sf)
       .collect().map(_.toSeq)

@@ -5,6 +5,7 @@ import java.io.File
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.sources.IndexCache
 
 /** The index-as-table contract: the served query equals the
   * retrain-per-query path bit-for-bit, touches NO corpus-sized input at
@@ -12,15 +13,30 @@ import graft.SparkSpec
   * and file-prunes the codes table to the probed cells. */
 class IvfPqIndexSpec extends SparkSpec {
 
+  private def del(f: File): Unit = {
+    if (f.isDirectory) f.listFiles().foreach(del)
+    f.delete()
+  }
+
   private def rebuiltFresh(): String = {
     val path = IvfPqIndex.indexPath(spark, sf)
-    def del(f: File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(del)
-      f.delete()
-    }
     del(new File(path))
     path
   }
+
+  /** Drop the base generation and its compacted sibling, so the next
+    * compaction has a delta to fold; returns the base path. */
+  private def freshBase(): String = {
+    val basePath = IvfPqIndex.indexPath(spark, sf) + "_base"
+    del(new File(basePath + "_compacted"))
+    del(new File(basePath))
+    basePath
+  }
+
+  private def codeRows(path: String) =
+    spark.read.parquet(s"$path/codes")
+      .select("vec_id", "sub", "cluster", "cell")
+      .orderBy("vec_id", "sub").collect().map(_.toSeq).toSeq
 
   test("served results are bit-identical to the retrain-per-query path") {
     rebuiltFresh()
@@ -79,14 +95,9 @@ class IvfPqIndexSpec extends SparkSpec {
   }
 
   test("compaction folds the delta in: same results, single pruned scan") {
-    // start from a fresh BASE index so the compaction actually has a
-    // delta to fold (a leftover COMPACTED marker would make this vacuous)
-    val basePath = IvfPqIndex.indexPath(spark, sf) + "_base"
-    def del(f: File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(del)
-      f.delete()
-    }
-    del(new File(basePath))
+    // start from a fresh BASE index and no compacted generation, so the
+    // compaction actually has a delta to fold
+    val basePath = freshBase()
     val before = IvfPqIndex.serveWithDelta(spark, sf).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val after = IvfPqIndex.serveCompacted(spark, sf).collect()
@@ -94,12 +105,12 @@ class IvfPqIndexSpec extends SparkSpec {
     assert(after == before, "compaction must not change results")
     // the compacted table carries the delta rows
     val cut = IvfPqIndex.baseCutoff(spark, sf)
-    val compacted = spark.read.parquet(s"$basePath/codes")
+    val compacted = spark.read.parquet(s"$basePath" + "_compacted/codes")
     assert(compacted.filter(col("vec_id") > cut).count() > 0)
     // idempotent: a second compaction call does not duplicate the delta
     val n = compacted.count()
     IvfPqIndex.compactDelta(spark, sf)
-    assert(spark.read.parquet(s"$basePath/codes").count() == n)
+    assert(spark.read.parquet(s"$basePath" + "_compacted/codes").count() == n)
     // serving is back to ONE file source (no union with a compute leg):
     // every leaf scan in the plan is an index table
     val plan = IvfPqIndex.serveCompacted(spark, sf)
@@ -110,21 +121,36 @@ class IvfPqIndexSpec extends SparkSpec {
 
   test("compaction recovers from the marker-lost crash state without " +
       "duplicating the delta") {
-    // regression for ADVICE r7: the pre-fix code kept the COMPACTED
-    // marker OUTSIDE the generation and stamped it after the swap, so a
-    // crash in between left compacted codes that a re-run re-merged
-    // with the delta. Simulate exactly that state — compacted data, no
+    // regression for ADVICE r7: a crash after the compacted codes landed
+    // but before the marker was stamped must not make a re-run re-merge
+    // the delta. Simulate exactly that state — compacted data, no
     // marker — and require the re-run to converge, not duplicate.
-    val basePath = IvfPqIndex.indexPath(spark, sf) + "_base"
-    IvfPqIndex.compactDelta(spark, sf)
-    val n = spark.read.parquet(s"$basePath/codes").count()
-    val marker = new File(s"$basePath/codes/${IvfPqIndex.GenMarker}")
+    val path = IvfPqIndex.compactDelta(spark, sf)
+    val n = spark.read.parquet(s"$path/codes").count()
+    val marker = new File(path, IndexCache.Marker)
     assert(marker.exists(), "compacted generation must carry its marker")
     assert(marker.delete())
     IvfPqIndex.compactDelta(spark, sf)
-    assert(spark.read.parquet(s"$basePath/codes").count() == n,
+    assert(spark.read.parquet(s"$path/codes").count() == n,
       "re-compacting a marker-lost generation must not duplicate rows")
-    assert(new File(s"$basePath/codes/${IvfPqIndex.GenMarker}").exists())
+    assert(marker.exists())
+  }
+
+  test("compaction never rewrites the base: its codes stay delta-free " +
+      "and the delta serve is unchanged") {
+    val basePath = freshBase()
+    val delta = SimilarityQueries.queries("sim_ivfpq_delta_served")
+    val before = delta(spark, sf).collect().map(_.toSeq).toSeq
+    val baseBefore = codeRows(basePath)
+    val cut = IvfPqIndex.baseCutoff(spark, sf)
+    IvfPqIndex.compactDelta(spark, sf)
+    assert(spark.read.parquet(s"$basePath/codes")
+      .filter(col("vec_id") > cut).count() == 0,
+      "compaction wrote delta rows into the base generation")
+    assert(codeRows(basePath) == baseBefore,
+      "compaction changed the base codes")
+    assert(delta(spark, sf).collect().map(_.toSeq).toSeq == before,
+      "the delta serve moved after compaction")
   }
 
   test("the index builds once and is reused, not retrained per query") {

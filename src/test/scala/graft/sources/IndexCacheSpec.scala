@@ -62,6 +62,32 @@ class IndexCacheSpec extends SparkSpec {
     assert(f1 != f2, "rewritten fixture must land on a fresh fingerprint")
   }
 
+  test("generation writes once, stamps its marker only after a write " +
+      "that returns, and writes again once the marker is gone") {
+    import java.io.File
+    val path = s"$base/gen"
+    org.apache.commons.io.FileUtils.deleteDirectory(new File(path))
+    val marker = new File(path, IndexCache.Marker)
+    var writes = 0
+    def write(p: String): Unit = {
+      assert(!marker.exists(), "the marker must not precede the tables")
+      writes += 1
+      assert(new File(p, "t").mkdirs() || new File(p, "t").isDirectory)
+    }
+    // a write that throws (a killed build) leaves no marker
+    intercept[IllegalStateException] {
+      IndexCache.generation(path)(_ => throw new IllegalStateException("killed"))
+    }
+    assert(!marker.exists())
+    assert(IndexCache.generation(path)(write) == path)
+    assert(writes == 1 && marker.exists())
+    IndexCache.generation(path)(write)
+    assert(writes == 1, "a stamped generation must not be written again")
+    assert(marker.delete())
+    IndexCache.generation(path)(write)
+    assert(writes == 2 && marker.exists())
+  }
+
   /** Back-date a directory past the prune quiet window. */
   private def age(f: java.io.File): Unit =
     assert(f.setLastModified(System.currentTimeMillis() - 11 * 60 * 1000L))

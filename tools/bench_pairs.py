@@ -13,6 +13,15 @@ every pair's end-to-end metrics, each side's median and interquartile
 range, and for each metric the number of pairs the change won (better in
 the direction BENCHMARK.json declares). A run that fails or reports a
 failed operation is printed and counts as a loss for its side.
+
+Each metric then gets one no-regression verdict against its BENCHMARK.json
+`bound`, a fraction of the parent's median:
+  WORSE         the change's median is worse than the parent's by more
+                than the bound;
+  unresolved    otherwise, when the parent's IQR is wider than the bound
+                (relative to its median), unless every change run beats
+                every parent run;
+  inside bound  otherwise.
 """
 import argparse
 import json
@@ -46,6 +55,22 @@ def quartiles(xs):
     return q[0], q[2]
 
 
+def verdict(parent, change, better, bound):
+    """The no-regression verdict of one metric from each side's runs."""
+    if not parent or not change:
+        return "unresolved"
+    mp, mc = statistics.median(parent), statistics.median(change)
+    worse = (mc - mp) if better == "lower" else (mp - mc)
+    if worse > bound * abs(mp):
+        return "WORSE"
+    q1, q3 = quartiles(parent)
+    beats_all = (max(change) < min(parent) if better == "lower"
+                 else min(change) > max(parent))
+    if q3 - q1 > bound * abs(mp) and not beats_all:
+        return "unresolved"
+    return "inside bound"
+
+
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("parent")
@@ -58,6 +83,7 @@ def main():
 
     spec = json.loads((Path(a.change) / "BENCHMARK.json").read_text())
     better = {m["name"]: m["better"] for m in spec["end_to_end"]}
+    bound = {m["name"]: m["bound"] for m in spec["end_to_end"]}
     names = list(better)
     sides = {"parent": a.parent, "change": a.change}
     got = {"parent": [], "change": []}
@@ -93,6 +119,9 @@ def main():
             else:
                 line.append(f"{s} no runs")
         line.append(f"change won {wins[n]}/{a.pairs}")
+        v = verdict([r[n] for r in got["parent"]], [r[n] for r in got["change"]],
+                    better[n], bound[n])
+        line.append(f"verdict (bound {bound[n]:.2f}): {v}")
         print("  ".join(line))
 
 
