@@ -3,11 +3,19 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
-/** The single eager-materialization idiom for the iterative families —
-  * one place that names the fault-tolerance trade the per-site
-  * `localCheckpoint()` calls used to make implicitly. The superstep
-  * loops run on [[iterate]]: converged PageRank, label-propagation
-  * connected components, weighted SSSP, the kNN k-core peel, k-means
+/** The one eager barrier of `src/main`: every query that materializes a
+  * frame — a one-shot pipeline stage (`df.transform(Materialize(_))`)
+  * or a superstep loop — does it here, so the fault-tolerance trade is
+  * made once, by [[ModeKey]], instead of per call site. A barrier earns
+  * its place only when its frame has two or more consumers along the
+  * derivations that reach an action (or when a loop or a release needs
+  * the frame computed now). A frame with one consumer stays lazy unless
+  * `graft.Profile` measures the barrier faster; such a site says so in
+  * one line.
+  * `MaterializeSpec` fails on any raw `localCheckpoint`/`checkpoint`
+  * call outside this file. The superstep loops run on [[iterate]]:
+  * converged PageRank, label-propagation connected components,
+  * weighted SSSP, the kNN k-core peel, k-means
   * (`sim_kmeans_cells`), the PQ codebooks and BPE training
   * (`text_bpe_train` and the persisted tokenizer's build). The loops
   * that call [[apply]]/[[release]] by hand are star contraction, BFS and
@@ -41,12 +49,12 @@ import org.apache.spark.storage.StorageLevel
   *
   * All three modes are EAGER (the frame is computed before apply()
   * returns) and produce bit-identical results — pinned by
-  * `MaterializeSpec`, which runs iterative families under each mode and
-  * compares collected bits. Mode is read per-call from
-  * `spark.graft.materialize`, so a caller can flip it at runtime without
-  * rebuilding anything (release/reap act on what apply() actually did,
-  * not on the conf at release time — flipping the mode between the two
-  * calls cannot leak).
+  * `MaterializeSpec`, which runs iterative families and one-shot
+  * queries under each mode and compares collected bits. Mode is read
+  * per-call from `spark.graft.materialize`, so a caller can flip it at
+  * runtime without rebuilding anything (release/reap act on what
+  * apply() actually did, not on the conf at release time — flipping the
+  * mode between the two calls cannot leak).
   *
   * == persist-mode lifecycle contract ==
   * Spark's CacheManager holds STRONG references to cached plans until
@@ -67,10 +75,13 @@ import org.apache.spark.storage.StorageLevel
   * is kept, so a released frame consumed later recomputes from its
   * parents.
   *
-  * Deliberately NOT wired into the one-shot (non-iterative) pipeline
-  * stages: those use `localCheckpoint()` for scheduler-dedup within a
-  * single query, where a lost executor already fails the in-flight job
-  * and retry-from-source is the recovery path regardless.
+  * == The one exception ==
+  * `PageRank.prepared`'s edge table is `repartition(src).persist()`,
+  * not a barrier from here: every mode above hands back a frame with no
+  * output partitioning (a checkpoint's RDD loses it under AQE, and the
+  * persist mode rebases onto a bare RDD), while the cached plan keeps
+  * its hash partitioning on `src`, so each round's edges⋈ranks join
+  * reads the edge side in place instead of re-shuffling it.
   */
 object Materialize {
 

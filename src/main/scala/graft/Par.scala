@@ -18,8 +18,8 @@ import org.apache.spark.sql.{Column, DataFrame}
   */
 object Par {
 
-  /** Run independent eager legs (localCheckpoint / index-serve
-    * materializations) of ONE query as concurrent Spark jobs
+  /** Run independent eager legs (each a [[Materialize]] barrier or an
+    * index build) of ONE query as concurrent Spark jobs
     * (guide §2.6): actions are only sequential because the driver calls
     * them sequentially, and a composition query whose legs share no
     * lineage wastes the cluster's tail capacity running them one after
@@ -39,7 +39,7 @@ object Par {
     }
     // join ALL legs before inspecting any result: throwing at the first
     // failed leg would unwind the caller while later daemon threads are
-    // still running Spark jobs (localCheckpoint actions), racing the
+    // still running Spark jobs (Materialize barriers), racing the
     // driver's Materialize.reapAll/unpersist and contaminating the next
     // query's timing — the documented "rethrows after all legs settle"
     // contract, now actually implemented that way.

@@ -61,7 +61,7 @@ object Ranks {
     val ranged = df.repartitionByRange(parts, sortCols: _*)
       .sortWithinPartitions(sortCols: _*)
       .withColumn(MidCol, monotonically_increasing_id())
-      .localCheckpoint()
+      .transform(Materialize(_))
     val pidOf = shiftright(col(MidCol), 33)
     // bounded collect: ≤ `parts` rows, map-side combined
     val counts = ranged.groupBy(pidOf.as("pid")).agg(count(lit(1)).as("n"))

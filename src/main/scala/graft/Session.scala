@@ -50,8 +50,9 @@ object Session {
 
   /** The per-query reap, run once a query's result has been consumed
     * (step 2 of the [[Materialize]] lifecycle contract): drop the
-    * Materialize registry and every persistent RDD — localCheckpoint
-    * blocks included — so one query's intermediates don't squeeze the
+    * Materialize registry and every persistent RDD — so every barrier
+    * the query made, in any mode (`local`-mode checkpoint blocks
+    * included), goes — and one query's intermediates don't squeeze the
     * next query's memory. blocking=true so the removal finishes before
     * the next query starts. */
   def reap(spark: SparkSession): Unit = {

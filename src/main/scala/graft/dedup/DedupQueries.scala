@@ -84,7 +84,7 @@ object DedupQueries extends graft.QueryModule {
     */
   // the shingle pipeline feeds BOTH the posting-list and the doc-size
   // subtrees of the pair derivation — two corpus scans. Measured: a
-  // localCheckpoint here is a net LOSS (ngram pairs 1.7 s → 2.3 s at
+  // barrier here is a net LOSS (ngram pairs 1.7 s → 2.3 s at
   // sf0.1) — materializing the exploded shingle arrays costs more than
   // re-running the scan + codegen'd WordNgrams kernel, and at 100 TB
   // parking corpus-sized arrays in executor storage is the worse trade
@@ -199,7 +199,7 @@ object DedupQueries extends graft.QueryModule {
     * ARRIVAL RATE, not the corpus size. */
   private[graft] def lshIncrementalWith(s: SparkSession, dir: String,
       isNew: Column): DataFrame = {
-    val sh = shingled(s, dir).localCheckpoint()
+    val sh = shingled(s, dir).transform(graft.Materialize(_))
     val cand = incrementalCandidates(bandSignatures(sh), isNew)
     cand
       .join(sh.as("sa"), col("new_doc") === col("sa.doc_id"))
@@ -333,7 +333,7 @@ object DedupQueries extends graft.QueryModule {
         .groupBy("k").agg(count(lit(1)).as("n_postings"))
         .withColumn("pairs", col("n_postings") * expr("k * (k - 1) div 2"))
         .withColumn("capped", col("k") > MaxPosting)
-        .localCheckpoint() // feeds the rows and the total broadcast
+        .transform(graft.Materialize(_)) // feeds the rows and the total broadcast
       hist.crossJoin(broadcast(hist.agg(
           sum("pairs").as("pairs_uncapped"),
           sum(when(!col("capped"), col("pairs")).otherwise(0L))
@@ -360,7 +360,8 @@ object DedupQueries extends graft.QueryModule {
       val hist = jaccardScoredFrom(shingled(s, dir))
         .select(floor(col("jaccard") * 10).cast("long").as("jbin"))
         .groupBy("jbin").agg(count(lit(1)).as("n_pairs"))
-        .localCheckpoint() // ≤11 rows feed both the window and the total
+        // ≤11 rows feed both the window and the total
+        .transform(graft.Materialize(_))
       val w = Window.orderBy(col("jbin").desc)
         .rowsBetween(Window.unboundedPreceding, 0)
       hist
@@ -449,7 +450,7 @@ object DedupQueries extends graft.QueryModule {
     // shingle→minhash derivation runs exactly once, and the LSH stage
     // costs Σ bucket², never corpus².
     "dedup_minhash_lsh" -> ((s, dir) => {
-      val sh = shingled(s, dir).localCheckpoint()
+      val sh = shingled(s, dir).transform(graft.Materialize(_))
       // same posting-list shape as jaccardPairs; the MaxPosting bucket
       // cap is mirrored in the DuckDB oracle (contract, not approximation)
       val cand = bandCandidates(sh)
@@ -480,7 +481,8 @@ object DedupQueries extends graft.QueryModule {
     // exact BIGINT counts + two DOUBLE ratios — the audit costs the same
     // as running the two dedup paths it compares.
     "dedup_lsh_recall_audit" -> ((s, dir) =>
-      recallAuditFrom(shingled(s, dir).localCheckpoint(), MaxPosting)),
+      recallAuditFrom(shingled(s, dir).transform(graft.Materialize(_)),
+        MaxPosting)),
 
     // Edit-distance near-dup: the CHARACTER-level complement of the
     // token-level Jaccard verify. Same band-bucket candidate set (shared
@@ -493,10 +495,9 @@ object DedupQueries extends graft.QueryModule {
     // reason production near-dup stacks run edit distance only INSIDE an
     // LSH bucket.
     "dedup_edit_distance" -> ((s, dir) => {
-      val sh = shingled(s, dir).localCheckpoint()
       val pref = docs(s, dir)
         .select(col("doc_id"), substring(col("text"), 1, EditPrefix).as("p"))
-      bandCandidates(sh)
+      bandCandidates(shingled(s, dir))
         .join(pref.as("pa"), col("doc_a") === col("pa.doc_id"))
         .join(pref.as("pb"), col("doc_b") === col("pb.doc_id"))
         .select(col("doc_a"), col("doc_b"),
@@ -525,7 +526,7 @@ object DedupQueries extends graft.QueryModule {
     // `theory_rate` is written in fixed left-assoc order on both engines
     // so the doubles match bit-for-bit.
     "dedup_lsh_scurve" -> ((s, dir) => {
-      val sh = shingled(s, dir).localCheckpoint()
+      val sh = shingled(s, dir).transform(graft.Materialize(_))
       val mh = minhashSigs(sh)
       val bandEq = (0 until NumBands).map { b =>
         (col(s"sa.h${2 * b}") === col(s"sb.h${2 * b}")) &&
@@ -588,8 +589,8 @@ object DedupQueries extends graft.QueryModule {
     // geometry. One checkpointed shingle pass feeds both the pair
     // derivation and the signatures.
     "dedup_minhash_estimate" -> ((s, dir) => {
-      val sh = shingled(s, dir).localCheckpoint()
-      val mh = minhashSigs(sh).localCheckpoint()
+      val sh = shingled(s, dir).transform(graft.Materialize(_))
+      val mh = minhashSigs(sh).transform(graft.Materialize(_))
       val pairs = jaccardPairsFrom(sh)
       val matches = (0 until NumMinhash).map { i =>
         when(col(s"a.h$i") === col(s"b.h$i"), 1).otherwise(0)
@@ -617,7 +618,8 @@ object DedupQueries extends graft.QueryModule {
     // pairs quadratically); at real 100 TB scale use a 64-bit simhash
     // with 16-bit chunks — same plan shape, 256× the bucket space.
     "dedup_simhash_pairs" -> ((s, dir) => {
-      val sig = simhashSigs(s, dir).localCheckpoint()
+      // one consumer, kept: measured faster materialized (Profile)
+      val sig = simhashSigs(s, dir).transform(graft.Materialize(_))
       val chunks = sig.select(col("doc_id"), col("simhash"),
         explode(sequence(lit(0), lit(3))).as("c"))
         .withColumn("chunk",
@@ -648,7 +650,8 @@ object DedupQueries extends graft.QueryModule {
     // identically on both engines (the sign-extended high bits are masked
     // off), so the negative top-bit signature is safe.
     "dedup_simhash64_pairs" -> ((s, dir) => {
-      val sig = simhash64Sigs(s, dir).localCheckpoint()
+      // one consumer, kept: measured faster materialized (Profile)
+      val sig = simhash64Sigs(s, dir).transform(graft.Materialize(_))
       val chunks = sig.select(col("doc_id"), col("simhash64"),
         explode(sequence(lit(0), lit(3))).as("c"))
         .withColumn("chunk",
@@ -681,8 +684,8 @@ object DedupQueries extends graft.QueryModule {
     * RATIO, the quantity that decides whether a bucket is dropped). */
   private[graft] def recallAuditFrom(sh: DataFrame, cap: Int): DataFrame = {
       val exact = jaccardPairsFrom(sh, cap)
-        .select("doc_a", "doc_b").localCheckpoint()
-      val cand = bandCandidates(sh, cap).localCheckpoint()
+        .select("doc_a", "doc_b").transform(graft.Materialize(_))
+      val cand = bandCandidates(sh, cap).transform(graft.Materialize(_))
       val verified = cand
         .join(sh.as("sa"), col("doc_a") === col("sa.doc_id"))
         .join(sh.as("sb"), col("doc_b") === col("sb.doc_id"))
@@ -692,7 +695,7 @@ object DedupQueries extends graft.QueryModule {
             size(array_union(col("sa.shingles"), col("sb.shingles"))))
             .as("jaccard"))
         .filter(col("jaccard") >= JaccardThreshold)
-        .select("doc_a", "doc_b").localCheckpoint()
+        .select("doc_a", "doc_b").transform(graft.Materialize(_))
       val nExact = exact.agg(count(lit(1)).as("n_exact"))
       val nCand = cand.agg(count(lit(1)).as("n_lsh_cand"))
       val nVer = verified.agg(count(lit(1)).as("n_lsh_verified"))

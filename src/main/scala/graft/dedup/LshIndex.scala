@@ -51,7 +51,8 @@ object LshIndex {
   private[graft] def buildIfMissingAt(s: SparkSession, dir: String,
       isNewCol: org.apache.spark.sql.Column, tag: String): String =
     graft.sources.IndexCache.generation(indexPath(s, dir) + tag) { path =>
-      val shIdx = shingled(s, dir).filter(!isNewCol).localCheckpoint()
+      val shIdx = shingled(s, dir).filter(!isNewCol)
+        .transform(graft.Materialize(_))
       val postings = bandSignatures(shIdx)
         .groupBy("band", "sig")
         .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
@@ -76,7 +77,7 @@ object LshIndex {
       isNewCol: org.apache.spark.sql.Column, path: String): DataFrame = {
     val postings = s.read.parquet(s"$path/postings")
     val idxShingles = s.read.parquet(s"$path/shingles")
-    val shNew = shingled(s, dir).filter(isNewCol).localCheckpoint()
+    val shNew = shingled(s, dir).filter(isNewCol).transform(graft.Materialize(_))
     val cand = bandSignatures(shNew)
       .join(postings, Seq("band", "sig"))
       .select(col("doc_id").as("new_doc"), explode(col("ids")).as("idx_doc"))

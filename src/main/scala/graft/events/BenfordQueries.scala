@@ -67,7 +67,7 @@ object BenfordQueries extends graft.QueryModule {
             (col("n_obs").cast("double") -
               col("n").cast("double") * col("benford_p")) /
             (col("n").cast("double") * col("benford_p")))
-        .localCheckpoint() // 9 rows; feeds the fold and the output
+        .transform(graft.Materialize(_)) // 9 rows; feeds the fold and the output
       val chi2 = terms
         .agg(sort_array(collect_list(struct(col("digit"), col("term"))))
           .as("ts"))

@@ -46,7 +46,8 @@ object CausalQueries extends graft.QueryModule {
             .as("n_purchases"))
         .withColumn("mean_purchases",
           col("n_purchases").cast("double") / col("n_users"))
-        .localCheckpoint() // 4 rows; feeds the DiD pick and the output
+        // 4 rows; feeds the DiD pick and the output
+        .transform(graft.Materialize(_))
       def cell(arm: Int, period: String) =
         max(when(col("arm") === arm && col("period") === period,
           col("mean_purchases")))
@@ -97,7 +98,8 @@ object CausalQueries extends graft.QueryModule {
           sum(when(col("day") >= col("split_day") &&
             col("event_type") === "purchase", 1L).otherwise(0L)).as("y"))
         .withColumn("arm", pmod(col("user_id"), lit(2L)))
-        .localCheckpoint() // global moments + per-arm cells, one pass
+        // global moments + per-arm cells, one pass
+        .transform(graft.Materialize(_))
       val m = users.agg(count(lit(1)).as("n"),
         sum("x").as("sx"), sum("y").as("sy"),
         sum(col("x") * col("y")).as("sxy"),
@@ -144,7 +146,6 @@ object CausalQueries extends graft.QueryModule {
           sum(when(col("day") >= col("split_day") &&
             col("event_type") === "purchase", 1L).otherwise(0L)).as("y"))
         .withColumn("arm", pmod(col("user_id"), lit(2L)))
-        .localCheckpoint()
       val m = users.agg(count(lit(1)).as("n"),
         sum(when(col("arm") === 0L, 1L).otherwise(0L)).as("n_a"),
         sum(when(col("arm") === 1L, 1L).otherwise(0L)).as("n_b"),
@@ -201,7 +202,8 @@ object CausalQueries extends graft.QueryModule {
           when(col("n_c") > 0L && col("n_t") > 0L,
             col("sy_t").cast("double") / col("n_t") -
               col("sy_c").cast("double") / col("n_c")))
-        .localCheckpoint() // <=4 rows; feeds the fold and the output
+        // <=4 rows; feeds the fold and the output
+        .transform(graft.Materialize(_))
       val pooled = cells
         .agg(sort_array(collect_list(when(col("diff").isNotNull,
           struct(col("stratum"), (col("diff") * col("n_users"))

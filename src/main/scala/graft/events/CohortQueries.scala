@@ -133,7 +133,8 @@ object CohortQueries extends graft.QueryModule {
     // so the consumer can mask the ramp-in.
     "events_dau_stickiness" -> ((s, dir) => {
       val act = withDay(s, dir).select("day", "user_id").distinct()
-        .localCheckpoint() // feeds DAU, the fan-out, and the span count
+        // feeds DAU, the fan-out, and the span count
+        .transform(graft.Materialize(_))
       val dau = act.groupBy("day").agg(countDistinct("user_id").as("dau"))
       val wau = act
         .select(col("user_id"), col("day"),
@@ -159,7 +160,8 @@ object CohortQueries extends graft.QueryModule {
     * seeded random histograms ([[graft.events.StatsPropertySpec]]). */
   private[graft] def ksFromBinned(histIn: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    val hist = histIn.localCheckpoint() // ≤#bins rows feed window + totals
+    // ≤#bins rows feed window + totals
+    val hist = histIn.transform(graft.Materialize(_))
     val w = Window.orderBy("vbin")
       .rowsBetween(Window.unboundedPreceding, 0)
     val cdf = hist

@@ -268,7 +268,8 @@ object EventsQueries extends graft.QueryModule {
     "events_hll_rolling" -> ((s, dir) => {
       val ev = events(s, dir).withColumn("day", expr(s"ts div $DayUs"))
       val regs = hllRegisters(ev, Seq("day"))
-        .localCheckpoint() // the stored sketch table: #days × ≤64 rows
+        // the stored sketch table: #days × ≤64 rows
+        .transform(graft.Materialize(_))
       val days = regs.select("day").distinct()
         .select(col("day").as("target_day"))
       val merged = regs
@@ -341,7 +342,8 @@ object EventsQueries extends graft.QueryModule {
         .agg(graft.sketch.KmvDistinct.kmvMins(
           graft.hash.Fnv1a32.fnv1a32(col("user_id").cast("string")), k)
           .as("mins"))
-        .localCheckpoint() // tiny day dimension, feeds both join sides
+        // tiny day dimension, feeds both join sides
+        .transform(graft.Materialize(_))
       val pairs = mins.select(col("day").as("day_a"), col("mins").as("ma"))
         .join(mins.select(col("day").as("day_b"), col("mins").as("mb")),
           col("day_a") < col("day_b"))

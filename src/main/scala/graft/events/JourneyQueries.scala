@@ -159,7 +159,7 @@ object JourneyQueries extends graft.QueryModule {
             .otherwise(0L))
         .withColumn("session_idx", sum(col("new_session")).over(wRun))
         .select("user_id", "session_idx", "event_type", "ts")
-        .localCheckpoint() // feeds 4 step tables — sessionize ONCE
+        .transform(graft.Materialize(_)) // feeds 4 step tables — sessionize ONCE
       val keys = Seq("user_id", "session_idx")
       val viewed = sess.filter(col("event_type") === "view")
         .groupBy(keys.head, keys.tail: _*).agg(min("ts").as("v_ts"))
@@ -208,7 +208,7 @@ object JourneyQueries extends graft.QueryModule {
         .select(expr(s"(p_ts - v_ts) div ${10L * 60 * 1000000L}")
           .as("lag_10min"))
       val hist = lag.groupBy("lag_10min").agg(count(lit(1)).as("n"))
-        .localCheckpoint() // feeds the window and the total
+        .transform(graft.Materialize(_)) // feeds the window and the total
       val w = Window.orderBy("lag_10min")
         .rowsBetween(Window.unboundedPreceding, 0)
       hist.withColumn("cum", sum("n").over(w))
@@ -251,7 +251,7 @@ object JourneyQueries extends graft.QueryModule {
     import s.implicits._
     val hist = perUser.groupBy("c").agg(count(lit(1)).as("n_users"))
       .withColumn("events", col("c") * col("n_users"))
-      .localCheckpoint() // feeds the totals and the cumulative walk
+      .transform(graft.Materialize(_)) // feeds the totals and the cumulative walk
     val tot = hist.agg(sum("n_users").as("total_users"),
       sum("events").as("total_events"))
     val w = Window.orderBy(col("c").desc)

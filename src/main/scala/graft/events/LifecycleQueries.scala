@@ -99,7 +99,7 @@ object LifecycleQueries extends graft.QueryModule {
           sum(when(col("cens"), 1L).otherwise(0L)).as("n_censored"))
         // day-sized; feeds BOTH the factor-array fold and the final
         // projection — checkpoint so the corpus is scanned once
-        .localCheckpoint()
+        .transform(graft.Materialize(_))
       val wSuffix = Window.orderBy("day")
         .rowsBetween(Window.currentRow, Window.unboundedFollowing)
       val withRisk = byDay
@@ -164,7 +164,8 @@ object LifecycleQueries extends graft.QueryModule {
       val d = EventsQueries.events(s, dir)
         .withColumn("day", expr(s"ts div ${EventsQueries.DayUs}"))
         .groupBy("day").agg(count(lit(1)).as("n"))
-        .localCheckpoint() // feeds the fold, the index join, and max-day
+        // feeds the fold, the index join, and max-day
+        .transform(graft.Materialize(_))
       val dIdx = d.withColumn("i",
         row_number().over(Window.orderBy("day")))
       val xs = d.agg(sort_array(collect_list(
@@ -195,7 +196,7 @@ object LifecycleQueries extends graft.QueryModule {
           |      'b', 0.1D * ((0.2D * e.x + 0.8D * (acc.l + acc.b)) - acc.l)
           |           + 0.9D * acc.b,
           |      'fitted', acc.l + acc.b)))))""".stripMargin).as("st"))
-        .localCheckpoint() // fit rows + final state share one fold
+        .transform(graft.Materialize(_)) // fit rows + final state share one fold
       val fitRows = folded
         .select(explode(col("st.rows")).as("r"))
         .select(col("r.i").as("i"), col("r.l").as("level"),

@@ -78,7 +78,8 @@ object SeasonalQueries extends graft.QueryModule {
       val d = EventsQueries.events(s, dir)
         .withColumn("day", expr(s"ts div ${EventsQueries.DayUs}"))
         .groupBy("day").agg(count(lit(1)).as("n"))
-        .localCheckpoint() // fold + index join + max-day share one scan
+        // fold + index join + max-day share one scan
+        .transform(graft.Materialize(_))
       val dIdx = d.withColumn("i",
         row_number().over(Window.orderBy("day")))
       val xs = d.agg(sort_array(collect_list(struct(col("day"),
@@ -122,7 +123,7 @@ object SeasonalQueries extends graft.QueryModule {
         .withColumn("m1", expr(s"CAST($week1 AS DOUBLE) / 7.0D"))
         .withColumn("m2", expr(s"CAST($week2 AS DOUBLE) / 7.0D"))
         .select(expr(foldExpr).as("st"))
-        .localCheckpoint() // fit rows + final state share one fold
+        .transform(graft.Materialize(_)) // fit rows + final state share one fold
       val fitRows = folded
         .select(explode(col("st.rows")).as("r"))
         .select(col("r.day").as("day"), col("r.l").as("level"),
@@ -167,7 +168,8 @@ object SeasonalQueries extends graft.QueryModule {
       val (fits, _, _) = hwFits(s, dir)
       val resid = fits
         .withColumn("resid", col("x") - col("fitted"))
-        .localCheckpoint() // day-sized; feeds the fence and the output
+        // day-sized; feeds the fence and the output
+        .transform(graft.Materialize(_))
       val fence = resid.agg(
         expr("percentile(resid, 0.5)").as("med"))
       val withMed = resid.crossJoin(broadcast(fence))

@@ -53,7 +53,8 @@ object TrendQueries extends graft.QueryModule {
     * series with holes (the fixture's day series is dense, so the
     * restricted-pair path would otherwise go unexercised). */
   private[graft] def acfFromDaily(dayCounts: DataFrame): DataFrame = {
-    val d = dayCounts.localCheckpoint() // stats + both sides of the lag join
+    // stats + both sides of the lag join
+    val d = dayCounts.transform(graft.Materialize(_))
     val st = d.agg(count(lit(1)).as("n"), sum("x").as("s1"),
       sum(col("x") * col("x")).as("s2"))
     val lagged = d
@@ -92,7 +93,7 @@ object TrendQueries extends graft.QueryModule {
       // the day-sized reduction feeds BOTH the moment aggregate and the
       // window chain — checkpoint it so the corpus is scanned once, not
       // once per consumer (the reduced table is #days × #types rows)
-      val d = daily(s, dir).localCheckpoint()
+      val d = daily(s, dir).transform(graft.Materialize(_))
       val st = d.groupBy("event_type")
         .agg(count(lit(1)).as("nd"), sum("n_events").as("s"),
           sum(col("n_events") * col("n_events")).as("sq"))
@@ -239,7 +240,8 @@ object TrendQueries extends graft.QueryModule {
       val idx = d
         .withColumn("i",
           (row_number().over(Window.orderBy("day")) - 1).cast("long"))
-        .localCheckpoint() // #days-sized; feeds stats and the pick join
+        // #days-sized; feeds stats and the pick join
+        .transform(graft.Materialize(_))
       val st = idx.agg(count(lit(1)).as("n"), sum("x").as("sx"))
       val draws = s.range(BootB).select(col("id").as("r"))
         .crossJoin(broadcast(st))
@@ -276,7 +278,8 @@ object TrendQueries extends graft.QueryModule {
     // over ≤ #days values (exact Percentile state is days-sized, never
     // corpus-sized).
     "events_mad_outliers" -> ((s, dir) => {
-      val d = daily(s, dir).localCheckpoint() // feeds med, mad, and output
+      // feeds med, mad, and output
+      val d = daily(s, dir).transform(graft.Materialize(_))
       val med = d.groupBy("event_type")
         .agg(median(col("n_events")).as("med"))
       val mad = d.join(broadcast(med), "event_type")
@@ -306,7 +309,7 @@ object TrendQueries extends graft.QueryModule {
     "events_weekday_chi2" -> ((s, dir) => {
       val d = daily(s, dir)
         .withColumn("weekday", pmod(col("day") + 3, lit(7L)))
-        .localCheckpoint() // feeds per-weekday and per-type totals
+        .transform(graft.Materialize(_)) // feeds per-weekday and per-type totals
       val byWd = d.groupBy("event_type", "weekday")
         .agg(count(lit(1)).as("d_w"), sum("n_events").as("obs"))
       val byType = d.groupBy("event_type")
@@ -340,7 +343,8 @@ object TrendQueries extends graft.QueryModule {
         .withColumn("day", expr(s"ts div ${EventsQueries.DayUs}"))
         .groupBy("day").agg(count(lit(1)).as("x"))
         .withColumn("wd", pmod(col("day") + 3, lit(7L)))
-        .localCheckpoint() // slots, totals, observed, and every replica
+        // slots, totals, observed, and every replica
+        .transform(graft.Materialize(_))
       val st = d0.agg(count(lit(1)).as("dd"), sum("x").as("nn"))
       val wSlot = Window.orderBy("wd").rowsBetween(Window.unboundedPreceding, 0)
       val slots = d0.groupBy("wd").agg(count(lit(1)).as("d_w"))
@@ -395,7 +399,7 @@ object TrendQueries extends graft.QueryModule {
     // per type (~66k rows at a year of days) and NEVER corpus-sized —
     // the whole point of reducing before the quadratic step.
     "events_trend_mannkendall" -> ((s, dir) => {
-      val d = daily(s, dir).localCheckpoint() // pairs ×2 + ties + n
+      val d = daily(s, dir).transform(graft.Materialize(_)) // pairs ×2 + ties + n
       val pairs = d.alias("a")
         .join(d.alias("b"),
           col("a.event_type") === col("b.event_type") &&
@@ -442,7 +446,8 @@ object TrendQueries extends graft.QueryModule {
     // that wreck OLS. Same #days²-per-type pair shape as Mann-Kendall:
     // the corpus reduces to per-day counts FIRST; pairs are day-sized².
     "events_theilsen_trend" -> ((s, dir) => {
-      val d = daily(s, dir).localCheckpoint() // pairs ×2 + residuals + max
+      // pairs ×2 + residuals + max
+      val d = daily(s, dir).transform(graft.Materialize(_))
       val slopes = d.alias("a")
         .join(d.alias("b"),
           col("a.event_type") === col("b.event_type") &&

@@ -61,12 +61,11 @@ object WorkingSetQueries extends graft.QueryModule {
         .withColumn("seq",
           col("off") + row_number().over(wInB).cast("long"))
         .select("seq", "user_id")
-        .localCheckpoint() // both join sides + the census read this
       val wUser = Window.partitionBy("user_id").orderBy("seq")
       val acc = seqd
         .withColumn("prev", lag("seq", 1).over(wUser))
         .withColumn("nxt", lead("seq", 1).over(wUser))
-        .localCheckpoint()
+        .transform(graft.Materialize(_)) // both join sides + the census read this
       // targets: re-accesses, exploded to their interval's seq-chunks
       val targets = acc.filter(col("prev").isNotNull)
         .select(col("user_id").as("t_user"), col("prev"),
@@ -94,7 +93,6 @@ object WorkingSetQueries extends graft.QueryModule {
           acc("user_id") === dists("t_user") && acc("seq") === dists("s"),
           "left")
         .select(coalesce(col("d"), lit(0L)).as("d"))
-        .localCheckpoint() // one distance table feeds every capacity
       val census = acc.agg(count(lit(1)).as("n_accesses"),
         sum(when(col("prev").isNull, 1L).otherwise(0L))
           .as("n_compulsory"))

@@ -84,7 +84,7 @@ object GraphXAnalytics extends graft.QueryModule {
     // reductions of the edge list; the histogram is ≤ max-degree rows.
     "graph_clustering_coeff" -> ((s, dir) => {
       val pairs = DedupQueries.queries("dedup_ngram_jaccard")(s, dir)
-        .select("doc_a", "doc_b").localCheckpoint()
+        .select("doc_a", "doc_b").transform(graft.Materialize(_))
       val deg = pairs.select(col("doc_a").as("doc_id"))
         .unionAll(pairs.select(col("doc_b").as("doc_id")))
         .groupBy("doc_id").agg(count(lit(1)).as("degree"))
@@ -131,7 +131,7 @@ object GraphXAnalytics extends graft.QueryModule {
   private[graft] def modularityFromLabeledEdges(edges: DataFrame)
       : DataFrame = {
     val pairs = edges.select("src_a", "src_b")
-      .localCheckpoint() // feeds intra counts, degrees, and totals
+      .transform(graft.Materialize(_)) // feeds intra counts, degrees, and totals
     val intra = pairs.filter(col("src_a") === col("src_b"))
       .groupBy(col("src_a").as("source"))
       .agg(count(lit(1)).as("e_intra"))

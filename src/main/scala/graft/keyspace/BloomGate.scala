@@ -119,13 +119,13 @@ object BloomGate extends graft.QueryModule {
     // trade). The state and probe tables derive once (checkpointed);
     // each size is one more filter build over the same feed.
     "kv_bloom_size_sweep" -> ((s, dir) => {
-      val st = KvLog.state(s, dir).localCheckpoint()
+      val st = KvLog.state(s, dir).transform(graft.Materialize(_))
       val probes = KvLog.log(s, dir).filter(col("op") === "get")
         .select(col("key"),
           graft.hash.Fnv1a32.shardId(col("key")).as("shard_id"))
         .join(st.select(col("key"), lit(true).as("present")),
           Seq("key"), "left")
-        .localCheckpoint()
+        .transform(graft.Materialize(_))
       val legs = SweepMs.map { m =>
         val blooms = st.groupBy("shard_id")
           .agg(BloomBits.bloomBits(col("key"), m, KvBloomK).as("bf"))

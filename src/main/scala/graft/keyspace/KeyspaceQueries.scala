@@ -202,7 +202,7 @@ object KeyspaceQueries extends graft.QueryModule {
     // each key's ops inside one 8-seq window, so only the load-vs-now
     // diff exercises the update/delete branches.
     "kv_version_diff" -> ((s, dir) => {
-      val lg = KvLog.log(s, dir).localCheckpoint()
+      val lg = KvLog.log(s, dir).transform(graft.Materialize(_))
       val oldState = KvLog.compact(lg.filter(col("seq") % 8 === 0))
       val newState = KvLog.compact(lg)
       oldState.select(col("key"), col("value").as("v_old"))
@@ -241,7 +241,7 @@ object KeyspaceQueries extends graft.QueryModule {
     // never a keyspace ship. Both trees reduce their state in one pass
     // each; the diff joins control-plane-sized digest rows.
     "kv_merkle_diff" -> ((s, dir) => {
-      val lg = KvLog.log(s, dir).localCheckpoint()
+      val lg = KvLog.log(s, dir).transform(graft.Materialize(_))
       def st(df: DataFrame): DataFrame = df.select(col("key"), col("value"),
         graft.hash.Fnv1a32.shardId(col("key")).as("shard_id"))
       val newT = merkleTree(st(KvLog.compact(lg)))
@@ -269,10 +269,10 @@ object KeyspaceQueries extends graft.QueryModule {
     // broadcasts; the keyspace is touched once to bucket and once per
     // snapshot inside the shared checkpointed compaction.
     "kv_merkle_repair_plan" -> ((s, dir) => {
-      val lg = KvLog.log(s, dir).localCheckpoint()
+      val lg = KvLog.log(s, dir).transform(graft.Materialize(_))
       def st(df: DataFrame): DataFrame = df.select(col("key"), col("value"),
         graft.hash.Fnv1a32.shardId(col("key")).as("shard_id"))
-      val newS = st(KvLog.compact(lg)).localCheckpoint()
+      val newS = st(KvLog.compact(lg)).transform(graft.Materialize(_))
       val oldS = st(KvLog.compact(lg.filter(col("seq") % 8 === 0)))
       val diverged = merkleTree(newS).filter(col("level") === 0L)
         .select(col("shard_id"), col("bucket"), col("digest").as("d_new"))
@@ -333,7 +333,7 @@ object KeyspaceQueries extends graft.QueryModule {
     // absolute, drives the schedule. One checkpointed log feeds both
     // legs; each leg is a shard-sized aggregate (map-side combined).
     "kv_compaction_gc" -> ((s, dir) => {
-      val lg = KvLog.log(s, dir).localCheckpoint()
+      val lg = KvLog.log(s, dir).transform(graft.Materialize(_))
       val shard = graft.hash.Fnv1a32.shardId(col("key"))
       val logSide = lg.filter(col("op") === "put")
         .groupBy(shard.as("shard_id"))

@@ -652,7 +652,7 @@ object Multimodal extends graft.QueryModule {
     "media_phash_neardup" -> ((s, dir) => {
       val ph = imagePhash(s, dir)
         .filter(col("hash_hi") >= 0) // drop poisoned parse failures
-        .localCheckpoint()
+        .transform(graft.Materialize(_))
       val bands = ph.select(col("doc_id"),
         posexplode(array(
           expr("hash_lo & 65535"), expr("(hash_lo >> 16) & 65535"),
@@ -694,7 +694,7 @@ object Multimodal extends graft.QueryModule {
         // the closed-form oracle assumes every image decodes, so a
         // -1-sentinel row entering the pair join would silently diverge
         // (ADVICE r8); matching media_phash_neardup's gate
-        .localCheckpoint()
+        .transform(graft.Materialize(_))
       pairs
         .join(ph.select(col("doc_id").as("doc_a"),
           col("hash_hi").as("hi_a"), col("hash_lo").as("lo_a"),

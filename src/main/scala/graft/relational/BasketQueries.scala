@@ -39,7 +39,8 @@ object BasketQueries extends graft.QueryModule {
           col("l_partkey") === col("p_partkey"))
         .select(col("l_orderkey").as("basket"), col("p_brand").as("item"))
         .distinct()
-        .localCheckpoint() // feeds N, c1, and both sides of the pair join
+        // feeds N, c1, and both sides of the pair join
+        .transform(graft.Materialize(_))
       val n = items.agg(countDistinct("basket").as("n"))
       val c1 = items.groupBy("item").agg(count(lit(1)).as("c1"))
       val pairs = items.as("a")
@@ -90,7 +91,8 @@ object BasketQueries extends graft.QueryModule {
         .groupBy(col("o_custkey").as("cust"), col("p_brand").as("item"))
         .agg(min("o_orderdate").as("first_d"),
           max("o_orderdate").as("last_d"))
-        .localCheckpoint() // both sides of the pair join + the census
+        // both sides of the pair join + the census
+        .transform(graft.Materialize(_))
       val c1 = spans.groupBy("item").agg(count(lit(1)).as("n_cust"))
       // rev must come from the UNfiltered direction counts: a surviving
       // a→b whose reverse fell under min-support still has a true
@@ -103,7 +105,8 @@ object BasketQueries extends graft.QueryModule {
         .groupBy(col("a.item").as("antecedent"),
           col("b.item").as("consequent"))
         .agg(count(lit(1)).as("n_cust_seq"))
-        .localCheckpoint() // brand²-bounded; both directions read it
+        // brand²-bounded; both directions read it
+        .transform(graft.Materialize(_))
       val seq = seqAll.filter(col("n_cust_seq") >= MinPairBaskets)
       val rev = seqAll.select(col("antecedent").as("consequent"),
         col("consequent").as("antecedent"),

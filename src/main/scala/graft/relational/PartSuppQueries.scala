@@ -103,7 +103,7 @@ object PartSuppQueries extends graft.QueryModule {
     // groupBy (not a correlated subquery), and the winners join runs on
     // the aggregate's own hash partitioning.
     "q2_min_cost_supplier" -> ((s, dir) => {
-      val reg = regional(s, dir).localCheckpoint()
+      val reg = regional(s, dir).transform(graft.Materialize(_))
       val minc = reg.groupBy(col("ps_partkey").as("mk"))
         .agg(min("ps_cents").as("min_cents"))
       val parts = s.read.parquet(s"$dir/part.parquet")
@@ -127,7 +127,7 @@ object PartSuppQueries extends graft.QueryModule {
       val value = regional(s, dir)
         .groupBy("ps_partkey")
         .agg(sum(col("ps_cents") * col("ps_availqty")).as("value_cents"))
-        .localCheckpoint()
+        .transform(graft.Materialize(_))
       val total = value.agg(sum("value_cents").as("total_cents"),
         count(lit(1)).as("n_parts"))
       value.crossJoin(broadcast(total))

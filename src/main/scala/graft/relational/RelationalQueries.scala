@@ -352,7 +352,7 @@ object RelationalQueries extends graft.QueryModule {
     // max broadcast back over it, and the equality cut is exact because
     // both sides are the SAME decimal sum (a double max could tie-break
     // differently across engines; decimal cannot).
-    // NOTE: localCheckpoint() is EAGER — constructing this DataFrame
+    // NOTE: the Materialize barrier is EAGER — constructing this DataFrame
     // (even just to print its schema or plan) executes the lineitem
     // scan+aggregate and pins the result's blocks until unpersisted.
     // Verify/Bench unpersist between queries; other callers should be
@@ -363,7 +363,7 @@ object RelationalQueries extends graft.QueryModule {
           col("l_shipdate") < date("1996-04-01"))
         .groupBy("l_suppkey")
         .agg(sum(revenue).as("total_rev"))
-        .localCheckpoint()
+        .transform(graft.Materialize(_))
       val top = rev.agg(max(col("total_rev")).as("max_rev"))
       rev.crossJoin(broadcast(top))
         .filter(col("total_rev") === col("max_rev"))

@@ -51,7 +51,7 @@ object PassageIndex {
       nCollection = Some(() =>
         ct.select("doc_id", "chunk").distinct().count()))
     val tDoc = ct.groupBy("doc_id", "term").agg(sum("tf").as("tf"))
-      .localCheckpoint()
+      .transform(graft.Materialize(_))
     ct.repartitionByRange(col("term"))
       .sortWithinPartitions("term", "doc_id", "chunk")
       .write.mode("overwrite").parquet(s"$path/postings")
@@ -121,7 +121,7 @@ object PassageIndex {
       .filter(col("doc_id") > cut)
     val dt = chunkTfOf(deltaDocs)
     val dtDoc = dt.groupBy("doc_id", "term").agg(sum("tf").as("tf"))
-      .localCheckpoint()
+      .transform(graft.Materialize(_))
     val postings = base.postings.unionByName(dt)
     // merged postings = the full corpus's chunk tf rows — same bound and
     // memo key as the full build, so the incremental path is guarded too
@@ -166,7 +166,7 @@ object PassageIndex {
       val merged = s.read.parquet(s"$base/postings")
         .filter(col("doc_id") <= cut) // idempotent: base rows by range
         .unionByName(chunkTfOf(docs.filter(col("doc_id") > cut)))
-        .localCheckpoint()
+        .transform(graft.Materialize(_))
       // full-corpus chunk stats after the merge (ADVICE r8)
       writeTables(s, dir, path, docs, merged, "chunk")
     }
@@ -181,7 +181,7 @@ object PassageIndex {
     * assembled (persisted, base+delta union, or compacted). */
   private def serveFrom(s: SparkSession, t: Tables, k: Int): DataFrame = {
     import t._
-    val c = cstats.localCheckpoint() // 1 row
+    val c = cstats.transform(graft.Materialize(_)) // 1 row
     // keywords: forward point-lookup × doc-level df — same rational
     // tf·N/df scoring and (score, term) tie-break as the exact path
     val kw = Window.partitionBy("query_doc")

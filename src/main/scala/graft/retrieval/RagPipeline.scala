@@ -69,14 +69,14 @@ object RagPipeline extends graft.QueryModule {
           .filter(col("quality") >= PipelineQueries.QualityThreshold &&
             col("lang_pred") === "en")
           .select("doc_id")
-          .localCheckpoint()
+          .transform(graft.Materialize(_))
         val dupDrops = DedupComponents.components(
             DedupQueries.queries("dedup_ngram_jaccard")(s, dir)
               .select("doc_a", "doc_b"))
           .filter(col("doc_id") =!= col("component"))
           .select("doc_id")
         val elig = clean.join(dupDrops, Seq("doc_id"), "left_anti")
-          .localCheckpoint()
+          .transform(graft.Materialize(_))
         (clean, elig)
       },
       // chunk census comes from the PERSISTED passage index (one row per
@@ -84,7 +84,7 @@ object RagPipeline extends graft.QueryModule {
       () => PassageIndex.buildIfMissing(s, dir),
       // -- serve side: nothing corpus-sized beyond the index legs --------
       () => RetrievalQueries.hybridIndexed(s, dir)
-        .select("query_doc", "rank", "doc_id").localCheckpoint())
+        .select("query_doc", "rank", "doc_id").transform(graft.Materialize(_)))
     val (clean, elig) = legs(0).asInstanceOf[(DataFrame, DataFrame)]
     val ppath = legs(1).asInstanceOf[String]
     val lists = legs(2).asInstanceOf[DataFrame]
@@ -95,7 +95,7 @@ object RagPipeline extends graft.QueryModule {
       .collect().map(_.getLong(0)).toSeq // ≤ |queries|·k, CollectBoundsSpec
     val eligCand = elig.filter(col("doc_id").isin(candIds: _*))
     val flists = lists.join(broadcast(eligCand), Seq("doc_id"), "left_semi")
-      .localCheckpoint()
+      .transform(graft.Materialize(_))
     // list-level SemDeDup on the filtered lists (ret_result_dedup's rule,
     // original hybrid ranks order the suppression)
     val vecs = s.read.parquet(s"$dir/embeddings.parquet")
@@ -103,7 +103,7 @@ object RagPipeline extends graft.QueryModule {
       .select(col("vec_id"), col("embedding"))
     val fa = flists.join(broadcast(vecs), col("doc_id") === col("vec_id"))
       .select(col("query_doc"), col("rank"), col("doc_id"), col("embedding"))
-      .localCheckpoint()
+      .transform(graft.Materialize(_))
     val fb = fa.select(col("query_doc").as("qb"), col("rank").as("rb"),
       col("doc_id").as("db"), col("embedding").as("eb"))
     val sup = fa.join(fb, col("query_doc") === col("qb") &&
@@ -112,7 +112,7 @@ object RagPipeline extends graft.QueryModule {
         >= ResultDedupCos)
       .select("query_doc", "doc_id").distinct()
     val kept = flists.join(sup, Seq("query_doc", "doc_id"), "left_anti")
-      .localCheckpoint()
+      .transform(graft.Materialize(_))
     // context pack over the dedup-kept rows (ret_context_pack's rule)
     val toks = docsAll.filter(col("doc_id").isin(candIds: _*))
       .select(col("doc_id"),

@@ -204,7 +204,7 @@ object RetrievalQueries extends graft.QueryModule {
     d.select(col("doc_id"), explode(split(col("text"), "\\s+")).as("term"))
       .filter(col("term") =!= "")
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
+      .transform(graft.Materialize(_))
   }
 
   /** The sparse (BM25) top-k lists: (query_doc, rank, doc_id, n_terms,
@@ -312,17 +312,13 @@ object RetrievalQueries extends graft.QueryModule {
     * Σ 1/(RrfK + rank) over the lists containing the doc — computed as
     * ONE fixed-order addition of two single-division doubles, so the
     * doubles stay bit-exact. */
-  def rrfFusion(s: SparkSession, dir: String): DataFrame = {
-    // the two legs share no lineage: overlap them (guide §2.6)
-    val Seq(sp, de) = graft.Par.together(
-      () => sparseTopk(s, dir).localCheckpoint(),
-      () => denseTopk(s, dir).localCheckpoint())
-    rrfFrom(sp, de)
-  }
+  def rrfFusion(s: SparkSession, dir: String): DataFrame =
+    rrfFrom(sparseTopk(s, dir), denseTopk(s, dir))
 
-  /** Fusion over ALREADY-MATERIALIZED top-k lists (≤ |queries|·k rows
-    * each) — shared by [[rrfFusion]] and [[ndcgEval]] so the sparse and
-    * dense pipelines are built exactly once per run. */
+  /** Fusion of two top-k lists (≤ |queries|·k rows each) — shared by
+    * [[rrfFusion]], the hybrids and the evals; [[ndcgEval]] and
+    * [[mrrEval]] pass materialized lists so the sparse and dense
+    * pipelines are built exactly once per run. */
   private def rrfFrom(spList: DataFrame, deList: DataFrame): DataFrame = {
     val sp = spList
       .select(col("query_doc"), col("doc_id"), col("rank").as("rs"))
@@ -355,8 +351,8 @@ object RetrievalQueries extends graft.QueryModule {
     // rows each); the fused list derives from the SAME materialized
     // pair — the corpus is tokenized once and vector-scanned once
     val Seq(sp, de) = graft.Par.together(
-      () => sparseTopk(s, dir).localCheckpoint(),
-      () => denseTopk(s, dir).localCheckpoint())
+      () => sparseTopk(s, dir).transform(graft.Materialize(_)),
+      () => denseTopk(s, dir).transform(graft.Materialize(_)))
     val lists =
       sp.select(lit("sparse").as("method"),
           col("query_doc"), col("rank"), col("doc_id"))
@@ -396,10 +392,11 @@ object RetrievalQueries extends graft.QueryModule {
     * formula as [[rrfFusion]]. The exact dense leg remains available as
     * eval ground truth (`ret_dense_topk`); this is the serving path. */
   def hybridServed(s: SparkSession, dir: String): DataFrame = {
+    // one consumer per leg, kept: measured faster materialized (Profile)
     val Seq(sp, ann) = graft.Par.together(
-      () => sparseTopk(s, dir).localCheckpoint(),
+      () => sparseTopk(s, dir).transform(graft.Materialize(_)),
       () => graft.sim.IvfPqIndex.serveMulti(s, dir, QueryDocs, TopK)
-        .localCheckpoint())
+        .transform(graft.Materialize(_)))
     rrfFrom(sp, ann)
   }
 
@@ -411,11 +408,13 @@ object RetrievalQueries extends graft.QueryModule {
     * is the same embedding-cluster label as [[ndcgEval]]. The only
     * doubles are single divisions of exact integers. */
   def mrrEval(s: SparkSession, dir: String): DataFrame = {
+    // sp and de each feed two lists; the served list feeds one, kept:
+    // measured faster materialized (Profile)
     val Seq(sp, de, ann) = graft.Par.together(
-      () => sparseTopk(s, dir).localCheckpoint(),
-      () => denseTopk(s, dir).localCheckpoint(),
+      () => sparseTopk(s, dir).transform(graft.Materialize(_)),
+      () => denseTopk(s, dir).transform(graft.Materialize(_)),
       () => graft.sim.IvfPqIndex.serveMulti(s, dir, QueryDocs, TopK)
-        .localCheckpoint())
+        .transform(graft.Materialize(_)))
     def leg(df: DataFrame, m: String) =
       df.select(lit(m).as("method"), col("query_doc"), col("rank"),
         col("doc_id"))
@@ -461,11 +460,12 @@ object RetrievalQueries extends graft.QueryModule {
     * oracle. */
   def hybridIndexed(s: SparkSession, dir: String): DataFrame = {
     // the two persisted indexes are distinct paths (no build race) and
-    // the serve legs share no lineage: overlap them (guide §2.6)
+    // the serve legs share no lineage: overlap them (guide §2.6); one
+    // consumer per leg, kept: measured faster materialized (Profile)
     val Seq(sp, ann) = graft.Par.together(
-      () => SparseIndex.serve(s, dir).localCheckpoint(),
+      () => SparseIndex.serve(s, dir).transform(graft.Materialize(_)),
       () => graft.sim.IvfPqIndex.serveMulti(s, dir, QueryDocs, TopK)
-        .localCheckpoint())
+        .transform(graft.Materialize(_)))
     rrfFrom(sp, ann)
   }
 
@@ -485,8 +485,9 @@ object RetrievalQueries extends graft.QueryModule {
     * are raw whitespace-split indices in both engines. */
   def snippetSpans(s: SparkSession, dir: String): DataFrame = {
     val sp = SparseIndex.serve(s, dir).filter(col("rank") <= SnippetDocs)
-      .select("query_doc", "rank", "doc_id").localCheckpoint()
-    val kw = SparseIndex.queryKeywords(s, dir).localCheckpoint() // ≤ 9 rows
+      .select("query_doc", "rank", "doc_id").transform(graft.Materialize(_))
+    // ≤ 9 rows, one consumer, kept: measured faster materialized (Profile)
+    val kw = SparseIndex.queryKeywords(s, dir).transform(graft.Materialize(_))
     val candIds = sp.select("doc_id").distinct()
       .collect().map(_.getLong(0)).toSeq
     val pos = docs(s, dir).filter(col("doc_id").isin(candIds: _*))
@@ -495,7 +496,7 @@ object RetrievalQueries extends graft.QueryModule {
       .join(broadcast(kw), "term")
       .select(col("query_doc"), col("doc_id"), col("p").cast("long").as("p"))
     val hits = sp.join(pos, Seq("query_doc", "doc_id"))
-      .select("query_doc", "doc_id", "p").localCheckpoint()
+      .select("query_doc", "doc_id", "p").transform(graft.Materialize(_))
     val a = hits.select(col("query_doc"), col("doc_id"), col("p").as("start"))
     val b = hits.select(col("query_doc").as("qb"), col("doc_id").as("db"),
       col("p").as("pb"))
@@ -593,9 +594,10 @@ object RetrievalQueries extends graft.QueryModule {
   def prfExpand(s: SparkSession, dir: String): DataFrame = {
     val t = tf(s, dir)
     assertBm25Headroom(s, dir, t)
-    val kw1 = keywordsOf(s, dir, t).localCheckpoint()
+    val kw1 = keywordsOf(s, dir, t).transform(graft.Materialize(_))
+    // one consumer, kept: measured faster materialized (Profile)
     val fb = bm25Rank(s, dir, t, kw1).filter(col("rank") <= FbDocs)
-      .select("query_doc", "doc_id").localCheckpoint()
+      .select("query_doc", "doc_id").transform(graft.Materialize(_))
     val ew = Window.partitionBy("query_doc")
       .orderBy(col("w").desc, col("term"))
     val expt = t.join(broadcast(fb), "doc_id")
@@ -604,7 +606,7 @@ object RetrievalQueries extends graft.QueryModule {
       .groupBy("query_doc", "term").agg(sum("tf").as("w"))
       .withColumn("rn", row_number().over(ew))
       .filter(col("rn") === 1)
-      .select("query_doc", "term").localCheckpoint()
+      .select("query_doc", "term").transform(graft.Materialize(_))
     bm25Rank(s, dir, t, kw1.unionByName(expt))
       .join(broadcast(expt.withColumnRenamed("term", "exp_term")),
         "query_doc")
@@ -691,7 +693,7 @@ object RetrievalQueries extends graft.QueryModule {
         expr(s"CAST(p AS BIGINT) div $ChunkTokens").as("chunk"),
         col("term"))
       .groupBy("doc_id", "chunk", "term").agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
+      .transform(graft.Materialize(_))
   }
 
   /** MMR trade-off λ — and its complement as a LITERAL, because
@@ -721,7 +723,7 @@ object RetrievalQueries extends graft.QueryModule {
     * ([[mmrRerankCollected]], spec-pinned equal) and to the oracle. */
   def mmrRerank(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val de = denseTopk(s, dir).localCheckpoint()
+    val de = denseTopk(s, dir).transform(graft.Materialize(_))
     val cand = de.select(col("query_doc"), col("rank").as("dense_rank"),
       col("doc_id"), col("cos_sim").as("relevance"))
     val vecs = emb(s, dir).join(
@@ -770,7 +772,7 @@ object RetrievalQueries extends graft.QueryModule {
   private[retrieval] def mmrRerankCollected(
       s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val de = denseTopk(s, dir).localCheckpoint()
+    val de = denseTopk(s, dir).transform(graft.Materialize(_))
     val cand = de.select(col("query_doc"), col("rank").as("dense_rank"),
       col("doc_id"), col("cos_sim").as("relevance"))
     // candidate vectors by literal IN — ≤ |queries|·k ids, pruned scan
@@ -830,7 +832,7 @@ object RetrievalQueries extends graft.QueryModule {
     * kept flag so the budget decision is auditable. */
   def contextPack(s: SparkSession, dir: String): DataFrame = {
     val lists = hybridIndexed(s, dir)
-      .select("query_doc", "rank", "doc_id").localCheckpoint()
+      .select("query_doc", "rank", "doc_id").transform(graft.Materialize(_))
     val candIds = lists.select("doc_id").distinct()
       .collect().map(_.getLong(0)).toSeq
     val toks = docs(s, dir).filter(col("doc_id").isin(candIds: _*))
@@ -863,15 +865,13 @@ object RetrievalQueries extends graft.QueryModule {
     // bit-identical to ret_bm25_topk's
     val ct = chunkTf(s, dir)
     val tDoc = ct.groupBy("doc_id", "term").agg(sum("tf").as("tf"))
-      .localCheckpoint()
-    val Seq(sp, pp) = graft.Par.together(
-      () => sparseFrom(s, dir, tDoc)
-        .select(col("query_doc"), col("doc_id"), col("rank").as("rs"))
-        .localCheckpoint(),
-      () => passageFrom(s, dir, ct)
-        .select(col("query_doc"), col("doc_id"), col("rank").as("rp"))
-        .localCheckpoint())
-    val common = sp.join(pp, Seq("query_doc", "doc_id")).localCheckpoint()
+      .transform(graft.Materialize(_))
+    val sp = sparseFrom(s, dir, tDoc)
+      .select(col("query_doc"), col("doc_id"), col("rank").as("rs"))
+    val pp = passageFrom(s, dir, ct)
+      .select(col("query_doc"), col("doc_id"), col("rank").as("rp"))
+    val common = sp.join(pp, Seq("query_doc", "doc_id"))
+      .transform(graft.Materialize(_))
     val a = common.select(col("query_doc"), col("doc_id").as("da"),
       col("rs").as("rsa"), col("rp").as("rpa"))
     val b = common.select(col("query_doc").as("qb"), col("doc_id").as("db"),
@@ -908,14 +908,14 @@ object RetrievalQueries extends graft.QueryModule {
     * |queries|·k² rows; candidate vectors fetched by literal IN. */
   def resultDedup(s: SparkSession, dir: String): DataFrame = {
     val lists = hybridIndexed(s, dir)
-      .select("query_doc", "rank", "doc_id").localCheckpoint()
+      .select("query_doc", "rank", "doc_id").transform(graft.Materialize(_))
     val ids = lists.select("doc_id").distinct()
       .collect().map(_.getLong(0)).toSeq
     val vecs = emb(s, dir).filter(col("vec_id").isin(ids: _*))
       .select(col("vec_id"), col("embedding"))
     val a = lists.join(broadcast(vecs), col("doc_id") === col("vec_id"))
       .select(col("query_doc"), col("rank"), col("doc_id"), col("embedding"))
-      .localCheckpoint()
+      .transform(graft.Materialize(_))
     val b = a.select(col("query_doc").as("qb"), col("rank").as("rb"),
       col("doc_id").as("db"), col("embedding").as("eb"))
     val sup = a.join(b, col("query_doc") === col("qb") &&
@@ -956,7 +956,7 @@ object RetrievalQueries extends graft.QueryModule {
         col("source") === col("q_source"))
       .select(col("query_doc"), col("vec_id").as("doc_id"),
         cosine(col("embedding"), col("q_emb")).as("cos_sim"))
-      .localCheckpoint()
+      .transform(graft.Materialize(_))
     cand
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= TopK)
@@ -985,7 +985,7 @@ object RetrievalQueries extends graft.QueryModule {
       .join(broadcast(qsrc), "query_doc")
       .filter(col("source") === col("q_source"))
       .select("query_doc", "doc_id", "n_terms", "score_fp")
-      .localCheckpoint()
+      .transform(graft.Materialize(_))
     val w = Window.partitionBy("query_doc")
       .orderBy(col("score_fp").desc, col("doc_id"))
     scored

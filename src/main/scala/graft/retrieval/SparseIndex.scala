@@ -164,7 +164,7 @@ object SparseIndex {
       val merged = s.read.parquet(s"$base/postings")
         .filter(col("doc_id") <= cut) // idempotent: base rows by range
         .unionByName(tfOf(docs.filter(col("doc_id") > cut)))
-        .localCheckpoint()
+        .transform(graft.Materialize(_))
       // full-corpus stats again after the merge (ADVICE r8) — shares the
       // full build's memo key, so at most one aggregate per corpus
       writeTables(s, dir, path, docs, merged, "doc")
@@ -200,7 +200,7 @@ object SparseIndex {
     val path = buildIfMissing(s, dir)
     keywordsFrom(s.read.parquet(s"$path/forward"),
       s.read.parquet(s"$path/vstats"),
-      s.read.parquet(s"$path/cstats").localCheckpoint())
+      s.read.parquet(s"$path/cstats"))
   }
 
   /** The shared serving tail over one generation's tables (persisted,
@@ -212,7 +212,7 @@ object SparseIndex {
     * identical reduced integer chain of `sparseTopk`. */
   private def serveFrom(s: SparkSession, t: Tables, k: Int): DataFrame = {
     import t._
-    val c = cstats.localCheckpoint() // 1 row: n, tl
+    val c = cstats.transform(graft.Materialize(_)) // 1 row: n, tl
     val keywords = keywordsFrom(forward, vstats, c)
     // literal term predicates -> parquet row-group pruning on postings
     val kwRows = keywords.collect().map(r => (r.getLong(0), r.getString(1)))

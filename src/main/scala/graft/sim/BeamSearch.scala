@@ -164,7 +164,7 @@ object BeamSearch extends graft.QueryModule {
   private[graft] def beamBatchOver(s: SparkSession, dir: String,
       edges: DataFrame, qsIn: DataFrame): DataFrame = {
     val e = emb(s, dir)
-    val qs = qsIn.localCheckpoint() // ≤ |q| rows, read every hop
+    val qs = qsIn.transform(graft.Materialize(_)) // ≤ |q| rows, read every hop
     def topB(scoredPairs: DataFrame): DataFrame = {
       val w = Window.partitionBy("q_id")
         .orderBy(col("cos_sim").desc, col("vec_id"))
@@ -181,7 +181,7 @@ object BeamSearch extends graft.QueryModule {
     val anchors = edges.filter(col("vec_id").isin(qIds: _*))
       .select(col("vec_id").as("q_id"), col("nbr").as("vec_id"))
       .filter(col("vec_id") =!= col("q_id"))
-      .localCheckpoint() // ≤ |q|·KnnK rows
+      .transform(graft.Materialize(_)) // ≤ |q|·KnnK rows
     val anchorIds = anchors.select("vec_id").distinct()
       .collect().map(_.getLong(0))
     // a (q, v) pair enters beam0 iff v is a sampled entry (valid for
@@ -194,7 +194,7 @@ object BeamSearch extends graft.QueryModule {
         .filter(isEntry || coalesce(col("is_anch"), lit(false)))
         .select(col("q_id"), col("vec_id"),
           cosine(col("embedding"), col("q_emb")).as("cos_sim")))
-      .localCheckpoint()
+      .transform(graft.Materialize(_))
     for (_ <- 1 to BeamHops) {
       val fIds = beam.select("vec_id").distinct()
         .collect().map(_.getLong(0))
@@ -205,7 +205,7 @@ object BeamSearch extends graft.QueryModule {
         .filter(col("nbr") =!= col("q_id"))
         .select(col("q_id"), col("nbr").as("vec_id"))
       val cand = beam.select("q_id", "vec_id").union(nbrPairs).distinct()
-        .localCheckpoint()
+        .transform(graft.Materialize(_))
       val cIds = cand.select("vec_id").distinct()
         .collect().map(_.getLong(0))
       beam = topB(e.filter(col("vec_id").isin(cIds: _*))
@@ -213,7 +213,7 @@ object BeamSearch extends graft.QueryModule {
           .join(broadcast(qs), "q_id")
           .select(col("q_id"), col("vec_id"),
             cosine(col("embedding"), col("q_emb")).as("cos_sim")))
-        .localCheckpoint()
+        .transform(graft.Materialize(_))
     }
     beam.withColumn("rank", row_number().over(
         Window.partitionBy("q_id")
@@ -229,7 +229,7 @@ object BeamSearch extends graft.QueryModule {
     // hop probes don't re-run the pair derivation
     "sim_graph_beam_ann" -> ((s, dir) => {
       val edges = knnTopK(bucketCosinePairs(s, dir))
-        .select("vec_id", "nbr").localCheckpoint()
+        .select("vec_id", "nbr").transform(graft.Materialize(_))
       beamOver(s, dir, edges)
     }),
 

@@ -172,7 +172,7 @@ object IvfPqIndex {
     val q = s.read.parquet(s"$dir/embeddings.parquet")
       .filter(col("vec_id").isin(queryIds: _*))
       .select(col("vec_id").as("query_doc"), col("embedding").as("q_emb"))
-      .localCheckpoint()
+      .transform(graft.Materialize(_))
     // per-query probed cells: |queries| × NumCells control-plane rows,
     // collected so the codes scan gets LITERAL partition predicates
     val probeW = org.apache.spark.sql.expressions.Window
@@ -227,7 +227,7 @@ object IvfPqIndex {
     val qEmb = s.read.parquet(s"$dir/embeddings.parquet")
       .filter(col("vec_id") === QueryVec)
       .select(col("embedding").as("q_emb"))
-      .localCheckpoint()
+      .transform(graft.Materialize(_))
     // probed cells as LITERALS: a NumCells-row control-plane fetch —
     // collecting here is what turns the codes read into static file
     // pruning instead of a data-dependent join over every partition

@@ -60,11 +60,11 @@ object KnnGraphIndex extends graft.QueryModule {
     m.repartitionByRange(col("bucket"))
       .sortWithinPartitions("bucket", "vec_id")
       .write.mode("overwrite").parquet(s"$path/members")
-    val pairs = pairsFrom(m).localCheckpoint()
+    val pairs = pairsFrom(m).transform(graft.Materialize(_))
     pairs.repartitionByRange(col("vec_id"))
       .sortWithinPartitions("vec_id", "nbr")
       .write.mode("overwrite").parquet(s"$path/pairs")
-    val edges = knnTopK(pairs).localCheckpoint()
+    val edges = knnTopK(pairs).transform(graft.Materialize(_))
     edges.repartitionByRange(col("vec_id"))
       .sortWithinPartitions("vec_id", "rk")
       .write.mode("overwrite").parquet(s"$path/edges")
@@ -75,7 +75,8 @@ object KnnGraphIndex extends graft.QueryModule {
 
   /** Persist the generation at `path` over the members `m`. */
   private def generation(path: String)(m: => DataFrame): String =
-    graft.sources.IndexCache.generation(path)(writeTables(m.localCheckpoint(), _))
+    graft.sources.IndexCache.generation(path)(
+      writeTables(m.transform(graft.Materialize(_)), _))
 
   def buildIfMissing(s: SparkSession, dir: String): String =
     generation(indexPath(s, dir))(pairMembers(s, dir))
@@ -94,7 +95,7 @@ object KnnGraphIndex extends graft.QueryModule {
     val path = buildIfMissing(s, dir)
     val eDeg = s.read.parquet(s"$path/edges").select("vec_id", "nbr")
       .join(s.read.parquet(s"$path/degrees"), "vec_id")
-      .localCheckpoint()
+      .transform(graft.Materialize(_))
     pprRun(s, eDeg)
   }
 
@@ -115,7 +116,7 @@ object KnnGraphIndex extends graft.QueryModule {
     val path = buildScaledIfMissing(s, dir)
     val eDeg = s.read.parquet(s"$path/edges").select("vec_id", "nbr")
       .join(s.read.parquet(s"$path/degrees"), "vec_id")
-      .localCheckpoint()
+      .transform(graft.Materialize(_))
     pprRun(s, eDeg)
   }
 
@@ -157,7 +158,7 @@ object KnnGraphIndex extends graft.QueryModule {
       cut: Long, tag: String): DataFrame = {
     val path = buildBaseIfMissingAt(s, dir, cut, tag)
     val dm = pairMembers(s, dir).filter(col("vec_id") > cut)
-      .localCheckpoint()
+      .transform(graft.Materialize(_))
     val touched = dm.select("bucket").distinct()
       .collect().map(_.getLong(0)).toSeq
     val untouched = s.read.parquet(s"$path/pairs")

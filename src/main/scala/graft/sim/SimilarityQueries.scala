@@ -93,7 +93,7 @@ object SimilarityQueries extends graft.QueryModule {
         (count("*") * lit(KmeansFp))).as("mean_v"))
       .select(col("i").cast("long").as("i"), col("mean_v"))
       // 64-row dimension, two broadcast consumers
-      .localCheckpoint()
+      .transform(graft.Materialize(_))
     val cells = e
       .select(col("embedding"),
         posexplode(col("embedding")).as(Seq("i", "vi")))
@@ -260,7 +260,8 @@ object SimilarityQueries extends graft.QueryModule {
     * per dimension for cross-engine exactness. Checkpointed: it's a
     * 10-row table with multiple consumers — without the checkpoint each
     * consumer re-runs the (label, dim) corpus aggregation, one extra
-    * full scan per consumer at 100 TB. */
+    * full scan per consumer at 100 TB. `sim_centroid_outliers` has one
+    * consumer and keeps it: measured faster materialized (Profile). */
   private def labelCentroidsOf(e: DataFrame): DataFrame =
     e.select(col("label").cast("long").as("label"),
         posexplode(col("embedding")).as(Seq("i", "v")))
@@ -270,7 +271,7 @@ object SimilarityQueries extends graft.QueryModule {
       .groupBy("label")
       .agg(transform(array_sort(collect_list(struct(col("i"), col("val")))),
         x => x.getField("val")).as("cvec"))
-      .localCheckpoint()
+      .transform(graft.Materialize(_))
 
   /** Power-iteration rounds for the top-eigenvector query. Thirty-two L∞-
     * normalized multiplies from the all-ones start separate the dominant
@@ -405,7 +406,7 @@ object SimilarityQueries extends graft.QueryModule {
     * checkpoint), then each side's embedding and precomputed norm joins
     * back by id. */
   private[graft] def bucketCosinePairs(s: SparkSession, dir: String): DataFrame =
-    pairsFrom(pairMembers(s, dir).localCheckpoint()).drop("bucket")
+    pairsFrom(pairMembers(s, dir).transform(graft.Materialize(_))).drop("bucket")
 
   /** Per-vector top-[[KnnK]] cut over a scored pair set — the kNN-graph
     * edge list (vec_id, nbr, cos_sim, rk). Shared by `sim_knn_join` and
@@ -689,7 +690,7 @@ object SimilarityQueries extends graft.QueryModule {
     "sim_ivfpq_residual_ann" -> ((s, dir) => {
       val e = emb(s, dir)
       val centroids = coarseCentroids(e)
-      val assigned = assignedCells(e).localCheckpoint()
+      val assigned = assignedCells(e).transform(graft.Materialize(_))
       val sub = expr("zip_with(embedding, c_emb, " +
         "(a, b) -> CAST(a AS DOUBLE) - CAST(b AS DOUBLE))")
       val resid = assigned.join(broadcast(centroids), "cell")
@@ -771,7 +772,7 @@ object SimilarityQueries extends graft.QueryModule {
         .agg(pivots.head, pivots.tail: _*)
         .select(col("q_id"), col("vec_id"),
           (0 until PqM).map(j => col(s"d_$j")).reduce(_ + _).as("adc_dist"))
-        .localCheckpoint() // feeds both legs
+        .transform(graft.Materialize(_)) // feeds both legs
       val pq5 = top5(adc, col("adc_dist"))
       // IVF leg: the query's NProbe cells prune the candidate set
       val centroids = coarseCentroids(e)
@@ -854,7 +855,7 @@ object SimilarityQueries extends graft.QueryModule {
         // xx + aug² (floating, both engines identically), not assumed M
         .withColumn("mips_cos", col("ip") /
           (sqrt(col("xx") + col("aug") * col("aug")) * sqrt(col("qq"))))
-        .localCheckpoint()
+        .transform(graft.Materialize(_))
       val top = scored.orderBy(col("ip").desc, col("vec_id")).limit(TopK)
         .withColumn("rank_ip",
           row_number().over(Window.orderBy(col("ip").desc, col("vec_id")))
@@ -1117,12 +1118,12 @@ object SimilarityQueries extends graft.QueryModule {
         .select(col("doc_id"), col("text"))
       val cells = assignedCells(emb(s, dir))
         .select(col("vec_id").as("doc_id"), col("cell"))
-      val cd = docs.join(cells, "doc_id").localCheckpoint()
+      val cd = docs.join(cells, "doc_id").transform(graft.Materialize(_))
       val nDocs = cd.count()
       val terms = cd.select(col("cell"), col("doc_id"),
           explode(split(col("text"), "\\s+")).as("term"))
         .filter(col("term") =!= "").distinct()
-        .localCheckpoint() // feeds both df aggregations
+        .transform(graft.Materialize(_)) // feeds both df aggregations
       val dfc = terms.groupBy("cell", "term").agg(count("*").as("df_cell"))
       // a doc lives in exactly one cell, so count(*) per term IS the
       // corpus document frequency
@@ -1166,7 +1167,7 @@ object SimilarityQueries extends graft.QueryModule {
     // recall is the banding probability — SimilaritySpec measures it
     // against dedup_embedding_cosine on the fixture.
     "dedup_embedding_ann" -> ((s, dir) => {
-      val e = annSigned(s, dir).localCheckpoint()
+      val e = annSigned(s, dir).transform(graft.Materialize(_))
       val cand = e.select(col("vec_id"), col("sig16"),
           explode(sequence(lit(0), lit(AnnBands - 1))).as("c"))
         .withColumn("chunk",
@@ -1216,10 +1217,10 @@ object SimilarityQueries extends graft.QueryModule {
     // are this family's.
     "ret_graph_ppr" -> ((s, dir) => {
       val knn = knnTopK(bucketCosinePairs(s, dir))
-        .select("vec_id", "nbr").localCheckpoint()
+        .select("vec_id", "nbr").transform(graft.Materialize(_))
       val eDeg = knn
         .join(knn.groupBy("vec_id").agg(count(lit(1)).as("deg")), "vec_id")
-        .localCheckpoint()
+        .transform(graft.Materialize(_))
       pprRun(s, eDeg)
     }),
 
@@ -1262,7 +1263,7 @@ object SimilarityQueries extends graft.QueryModule {
         .filter(pmod(Fnv1a32.fnv1a32(
           concat(lit("cal:"), col("vec_id").cast("string"))), lit(10L)) === 0)
         .withColumn("nrm", sqrt(dot(col("embedding"), col("embedding"))))
-        .localCheckpoint()
+        .transform(graft.Materialize(_))
       samp.as("a").join(samp.as("b"), col("a.vec_id") < col("b.vec_id"))
         .select((dot(col("a.embedding"), col("b.embedding")) /
           (col("a.nrm") * col("b.nrm"))).as("cos_sim"))
@@ -1441,7 +1442,7 @@ object SimilarityQueries extends graft.QueryModule {
     "dedup_semantic" -> ((s, dir) => {
       val assigned = assignedCells(emb(s, dir))
         .withColumn("nrm", sqrt(dot(col("embedding"), col("embedding"))))
-        .localCheckpoint()
+        .transform(graft.Materialize(_))
       val pairs = assigned.as("a").join(assigned.as("b"),
           col("a.cell") === col("b.cell") &&
             col("a.vec_id") < col("b.vec_id"))

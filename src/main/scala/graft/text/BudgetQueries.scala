@@ -137,7 +137,7 @@ object BudgetQueries extends graft.QueryModule {
         .withColumn("full_epochs", expr("alloc_tokens div s_tok"))
         .withColumn("rem_tokens", col("alloc_tokens") -
           col("full_epochs") * col("s_tok"))
-        .localCheckpoint()
+        .transform(graft.Materialize(_))
       val docs = s.read.parquet(s"$dir/documents.parquet")
         .select(col("source"), col("doc_id"),
           size(split(col("text"), " ")).cast("long").as("n_tok"),

@@ -38,10 +38,11 @@ object CollocationQueries extends graft.QueryModule {
     "text_pmi_bigrams" -> ((s, dir) => {
       val toks = docs(s, dir)
         .select(col("doc_id"), split(col("text"), " ").as("toks"))
-        .localCheckpoint() // one tokenize feeds unigrams AND bigrams
+        // one tokenize feeds unigrams AND bigrams
+        .transform(graft.Materialize(_))
       val uni = toks.select(explode(col("toks")).as("w"))
         .groupBy("w").agg(count(lit(1)).as("c1"))
-        .localCheckpoint() // vocabulary-sized; feeds joins AND N1
+        .transform(graft.Materialize(_)) // vocabulary-sized; feeds joins AND N1
       val n1 = uni.agg(sum("c1").as("n1"))
       val pairs = toks.filter(size(col("toks")) >= 2)
         .select(explode(expr(
@@ -50,7 +51,7 @@ object CollocationQueries extends graft.QueryModule {
             "element_at(toks, i+2) AS w2))")).as("bg"))
         .select(col("bg.w1").as("w1"), col("bg.w2").as("w2"))
         .groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-        .localCheckpoint() // pair-sized; feeds the cut AND N2
+        .transform(graft.Materialize(_)) // pair-sized; feeds the cut AND N2
       val n2 = pairs.agg(sum("c12").as("n2"))
       pairs.filter(col("c12") >= MinPairCount)
         .join(broadcast(uni.select(col("w").as("w1"), col("c1").as("c1x"))),
@@ -90,10 +91,10 @@ object CollocationQueries extends graft.QueryModule {
             "element_at(toks, i+2) AS w2))")).as("bg"))
         .select(col("doc_id"), col("split"),
           col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-        .localCheckpoint() // train model + val probe share one pass
+        .transform(graft.Materialize(_)) // train model + val probe share one pass
       val m12 = occ.filter(col("split") === "train")
         .groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-        .localCheckpoint() // c1, N1L, N1R, Nt all derive from it
+        .transform(graft.Materialize(_)) // c1, N1L, N1R, Nt all derive from it
       val m1 = m12.groupBy("w1").agg(sum("c12").as("c1"),
         count(lit(1)).as("n1l"))
       val n1r = m12.groupBy("w2").agg(count(lit(1)).as("n1r"))

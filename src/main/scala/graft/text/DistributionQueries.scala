@@ -45,7 +45,7 @@ object DistributionQueries extends graft.QueryModule {
       // the vocab-sized counts feed the rank window AND the corpus total
       // — checkpoint so the corpus is tokenized once, not once per leg
       val freqs = words(s, dir).groupBy("w").agg(count(lit(1)).as("freq"))
-        .localCheckpoint()
+        .transform(graft.Materialize(_))
       val total = freqs.agg(sum("freq").as("total"))
       // top-k FIRST: orderBy+limit plans as TakeOrderedAndProject (the
       // corpus_epoch_order idiom), so the rank/cumulate window below

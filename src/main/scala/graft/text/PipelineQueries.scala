@@ -53,7 +53,7 @@ object PipelineQueries extends graft.QueryModule {
       .select(col("lang"), col("source"), col("n_avail"),
         expr(s"$QuotaBudget * n_avail div total").as("q0"),
         expr(s"$QuotaBudget * n_avail % total").as("rem"))
-      .localCheckpoint()
+      .transform(graft.Materialize(_))
     val wRem = Window.orderBy(col("rem").desc, col("lang"), col("source"))
     base
       .withColumn("rr", row_number().over(wRem).cast("long"))
@@ -139,7 +139,7 @@ object PipelineQueries extends graft.QueryModule {
     // where ranking changed the outcome. The roll-up a curator reads to
     // decide whether the ranking pass pays for itself.
     "corpus_dedup_gain" -> ((s, dir) => {
-      val ranked = canonicalRanked(s, dir).localCheckpoint()
+      val ranked = canonicalRanked(s, dir).transform(graft.Materialize(_))
       val best = ranked.filter(col("is_kept"))
         .select(col("component"), col("doc_id").as("kept_doc"),
           col("quality").as("kept_quality"))
@@ -260,7 +260,7 @@ object PipelineQueries extends graft.QueryModule {
         .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
         .select(col("doc_id"),
           (fnv1a32(col("w")) % DsirBuckets).as("f"))
-        .localCheckpoint()
+        .transform(graft.Materialize(_))
       val isBench = col("doc_id") < BenchDocs
       val tgt = toks.filter(isBench).groupBy("f").agg(count("*").as("tc"))
       val prop = toks.filter(!isBench).groupBy("f").agg(count("*").as("cc"))
@@ -338,7 +338,7 @@ object PipelineQueries extends graft.QueryModule {
             .cast("long"))
         // #langs-sized, two consumers (probe side + the normalizer's
         // broadcast build side) — without this the corpus groupBy runs twice
-        .localCheckpoint()
+        .transform(graft.Materialize(_))
       counts.crossJoin(broadcast(counts.agg(sum("qs").as("qs_total"))))
         .select(col("lang"), col("n_docs"),
           (col("qs").cast("double") / col("qs_total")).as("weight"),
@@ -401,7 +401,7 @@ object PipelineQueries extends graft.QueryModule {
       // pipeline and the contamination probe (composing the standalone
       // queries instead would shingle the corpus twice — a full extra
       // scan+tokenize at 100 TB); the plan pin asserts it
-      val sh = DedupQueries.shingled(s, dir).localCheckpoint()
+      val sh = DedupQueries.shingled(s, dir).transform(graft.Materialize(_))
       val dup = DedupComponents.components(
           DedupQueries.jaccardPairsFrom(sh).select("doc_a", "doc_b"))
         .filter(col("doc_id") =!= col("component"))
@@ -637,11 +637,7 @@ object PipelineQueries extends graft.QueryModule {
     "corpus_source_overlap" -> ((s, dir) => {
       val src = s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("source"))
-      // checkpoint the (tiny) verified-pair table before the two source
-      // joins: as the smaller side it is the broadcast build side, and
-      // an un-materialized build side re-runs the whole pair cascade
-      // once per join
-      DedupQueries.queries("dedup_ngram_jaccard")(s, dir).localCheckpoint()
+      DedupQueries.queries("dedup_ngram_jaccard")(s, dir)
         .join(src.select(col("doc_id").as("doc_a"),
           col("source").as("source_a")), Seq("doc_a"))
         .join(src.select(col("doc_id").as("doc_b"),

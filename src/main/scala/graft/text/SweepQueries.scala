@@ -55,7 +55,7 @@ object SweepQueries extends graft.QueryModule {
         // scan+tokenize would run twice (same trade as
         // corpus_temperature_mix — materialize the tiny reduction,
         // never the corpus)
-        .localCheckpoint()
+        .transform(graft.Materialize(_))
       val w = Window.orderBy(col("qbin").desc)
         .rowsBetween(Window.unboundedPreceding, 0)
       hist
@@ -142,7 +142,8 @@ object SweepQueries extends graft.QueryModule {
         .withColumn("shard", pmod(col("rank") - 1L, lit(OutShards)))
       val hist = planned.groupBy("shard")
         .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("n_tokens"))
-        .localCheckpoint() // feeds the rollup and the imbalance broadcast
+        // feeds the rollup and the imbalance broadcast
+        .transform(graft.Materialize(_))
       hist.crossJoin(broadcast(hist.agg(
           max("n_tokens").as("max_tok"), sum("n_tokens").as("tot_tok"))))
         .select(col("shard"), col("n_docs"), col("n_tokens"),

@@ -145,7 +145,7 @@ object TextQueries extends graft.QueryModule {
         .select(explode(split(col("text"), " ")).as("w"))
         .groupBy("w").agg(count("*").as("freq"))
         // vocab-sized; feeds the pair scan and the merge application
-        .localCheckpoint()
+        .transform(graft.Materialize(_))
       val top = wf.select(col("freq"),
           explode(when(length(col("w")) >= 2,
             expr("transform(sequence(0, length(w) - 2), " +
@@ -464,7 +464,8 @@ object TextQueries extends graft.QueryModule {
           "transform(sequence(0, size(toks)-2), " +
             "i -> concat(element_at(toks, i+1), ' ', element_at(toks, i+2)))"))
           .as("bg"))
-        .localCheckpoint() // tiny derivation feeding model AND probe scans
+        // tiny derivation feeding model AND probe scans
+        .transform(graft.Materialize(_))
       val m12 = occ.groupBy("bg").agg(count("*").as("c12"))
       val m1 = occ.select(substring_index(col("bg"), " ", 1).as("w1"))
         .groupBy("w1").agg(count("*").as("c1"))
@@ -499,11 +500,12 @@ object TextQueries extends graft.QueryModule {
             "i -> concat(element_at(toks, i+1), ' ', element_at(toks, i+2)))"))
           .as("bg"))
         .withColumn("w1", substring_index(col("bg"), " ", 1))
-        .localCheckpoint()
+        .transform(graft.Materialize(_))
       val train = occ.filter(col("split") === "train")
       val m12 = train.groupBy("bg").agg(count("*").as("c12"))
       val m1 = train.groupBy("w1").agg(count("*").as("c1"))
-        .localCheckpoint() // vocabulary-sized; feeds the probe AND |V|
+        // vocabulary-sized; feeds the probe AND |V|
+        .transform(graft.Materialize(_))
       // |V| is m1's row count by construction — never a third
       // corpus-sized distinct pass
       val vocab = m1.agg(count(lit(1)).as("v"))

@@ -4,20 +4,24 @@ import org.apache.spark.sql.functions._
 
 /** Safety contract for the drivers' between-queries reap (round-11
   * verdict item 9): `Session.reap` unpersists every persistent RDD — in
-  * particular locally-checkpointed legs whose lineage is TRUNCATED and
-  * cannot recompute — after each query's sink action completes. That is
-  * only safe because nothing ever re-reads a released checkpoint: each
-  * timed run rebuilds its query from scratch, and within one run all
-  * consumers of a leg execute under the single sink action before the
-  * reap. This spec pins both halves, so the WARN Spark logs on those
-  * unpersists ("locally checkpointed … cannot be recomputed") is
-  * provably informational here — and Session silences it accordingly.
+  * particular the barriers [[Materialize]] made in its default `local`
+  * mode, whose lineage is TRUNCATED and cannot recompute — after each
+  * query's sink action completes. That is only safe because nothing
+  * ever re-reads a released barrier: each timed run rebuilds its query
+  * from scratch, and within one run all consumers of a barrier execute
+  * under the single sink action before the reap. This spec pins both
+  * halves, so the WARN Spark logs on those unpersists ("locally
+  * checkpointed … cannot be recomputed") is provably informational
+  * here — and Session silences it accordingly. The negative control
+  * calls Spark's `localCheckpoint` directly: it pins what Spark itself
+  * does with a released local checkpoint.
   */
 class LocalCheckpointReleaseSpec extends SparkSpec {
 
   test("a Par.together query survives the bench lifecycle: " +
     "run → reap → fresh run, with no released checkpoint re-read") {
-    val fn = SparkEntry.queries("ret_rrf_fusion")
+    // ret_ndcg_eval materializes its sparse and dense legs in Par.together
+    val fn = SparkEntry.queries("ret_ndcg_eval")
     Session.consume(fn(spark, sf)) // first run, consumes its legs fully
     Session.reap(spark)            // the between-runs release
     // a fresh invocation must rebuild its own legs — if any code path

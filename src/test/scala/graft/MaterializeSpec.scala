@@ -7,11 +7,12 @@ import org.apache.spark.storage.StorageLevel
 /** Pins the [[Materialize]] mode switch: the three fault-tolerance
   * postures (local checkpoint / lineage-kept persist / reliable
   * checkpoint) must be pure execution-strategy choices — bit-identical
-  * results on the iterative families that use the helper. Runs the
+  * results on the queries whose barriers go through it. Runs the
   * connected-components family (label propagation + star contraction +
   * SSSP all route through Materialize), HITS, k-means, the k-core peel,
-  * BPE training and the convergence-driven PageRank under each mode
-  * and compares collected rows exactly.
+  * BPE training, the convergence-driven PageRank and two one-shot
+  * queries under each mode and compares collected rows exactly. Also
+  * pins that no raw barrier exists outside Materialize.
   */
 class MaterializeSpec extends SparkSpec {
 
@@ -153,5 +154,59 @@ class MaterializeSpec extends SparkSpec {
     assert(got("persist") === got("local"))
     assert(got("reliable") === got("local"))
     assert(got("local")._1.nonEmpty && got("local")._2 > 0)
+  }
+
+  // -- one-shot (non-iterative) barriers ----------------------------------
+
+  test("one-shot barriers are bit-identical under all three modes") {
+    // ret_rrf_fusion: fused lists over the materialized tokenize;
+    // dedup_minhash_estimate: a shingle barrier feeding the signatures
+    // AND the pair derivation, and a signature barrier read by a self-join
+    for (q <- Seq("ret_rrf_fusion", "dedup_minhash_estimate")) {
+      val got = Seq("local", "persist", "reliable").map { m =>
+        m -> withMode(m) { rows(SparkEntry.queries(q)(spark, sf)) }
+      }.toMap
+      Materialize.reapAll(spark)
+      assert(got("persist") === got("local"), s"$q: persist diverged")
+      assert(got("reliable") === got("local"), s"$q: reliable diverged")
+      assert(got("local").nonEmpty, s"$q: no rows")
+    }
+  }
+
+  test("persist mode: a one-shot query's barriers register and one reap drains them") {
+    withMode("persist") {
+      Materialize.reapAll(spark) // start from an empty registry
+      Session.consume(SparkEntry.queries("q15_top_supplier")(spark, sf))
+      assert(Materialize.reapAll(spark) > 0,
+        "a one-shot barrier did not go through Materialize")
+      assert(Materialize.reapAll(spark) === 0,
+        "reapAll must drain the registry completely")
+    }
+  }
+
+  test("no raw barrier in src/main: every one goes through Materialize") {
+    // the forked test JVM runs in the sbt base directory
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"${root.getAbsolutePath} not found")
+    val barrier = raw"\.(localCheckpoint|checkpoint)\(".r
+    def files(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap { f =>
+        if (f.isDirectory) files(f)
+        else if (f.getName.endsWith(".scala")) Seq(f)
+        else Nil
+      }
+    val scanned = files(root).filter(_.getName != "Materialize.scala")
+    assert(scanned.nonEmpty)
+    val offenders = scanned.flatMap { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try src.getLines().zipWithIndex.collect {
+        case (l, i) if barrier.findFirstIn(l).isDefined =>
+          s"${f.getPath}:${i + 1}"
+      }.toList
+      finally src.close()
+    }
+    if (offenders.nonEmpty)
+      fail("raw barriers outside Materialize (write .transform(Materialize(_))):\n" +
+        offenders.mkString("\n"))
   }
 }

@@ -102,12 +102,17 @@ class LshSkewSpec extends SparkSpec {
     // entries run unmodified (IndexCache fingerprints the table)
     val dir = java.nio.file.Files
       .createTempDirectory("graft_lsh_skew").toString
+    // the index generation is keyed by this one-off corpus, so no later
+    // run reuses it: delete it with the corpus (its path fingerprints
+    // the corpus, so it is resolved while the corpus exists)
+    var index: Option[String] = None
     try {
       skewedDocs(spark)
         .withColumn("lang", lit("en")).withColumn("source", lit("skew"))
         .withColumn("n_chars", length(col("text")).cast("long"))
         .coalesce(2)
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      index = Some(LshIndex.indexPath(spark, dir))
       val served = DedupQueries.queries("dedup_lsh_served")(spark, dir)
         .collect().map(_.toString).toSeq.sorted
       val retrain = DedupQueries.queries("dedup_lsh_incremental")(spark, dir)
@@ -116,6 +121,8 @@ class LshSkewSpec extends SparkSpec {
       assert(served === retrain,
         "served index must equal the retrain-per-call twin on skew")
     } finally {
+      index.foreach(p =>
+        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p)))
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
   }
